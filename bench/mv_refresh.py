@@ -2,25 +2,23 @@
 
 The scale argument for incremental view maintenance is that refresh cost
 tracks the DELTA, not the table: at 10^10 rows a per-epoch gold recompute
-is a full-table scan, while the delta algebra reads only the change
-interval plus the touched buckets of two snapshots. This script builds a
-replayed table, then times (a) a full recompute refresh and (b) an
-incremental refresh after a small merge touching a bounded key set, and
-reports the ratio. Run at growing --events to show the full cost growing
-with the table while the incremental cost stays flat.
+is a full-table scan, while the incremental refresh reads the change
+interval plus the touched buckets of ONE snapshot (lake/changelog
+interval_image). This script builds a replayed table, then times (a) a
+full recompute refresh and (b) an incremental refresh after a small merge
+touching a bounded key set, and reports the ratio. Run at growing
+--events to show the full cost growing with the table while the
+incremental cost stays flat.
 
 Three regimes (documented in the artifact — no silent caps):
 
-- POINT deltas (keys ≲ n_buckets/4): bucket pruning bounds the
-  before/after images to a few buckets → incremental wins outright, and
-  the win grows linearly with table size. This is the regime this VM can
-  demonstrate (per-bucket files are single-row-group at sf-bench sizes).
+- POINT deltas (keys ≲ n_buckets/4): bucket pruning bounds the scan to a
+  few buckets → incremental wins outright, and the win grows linearly
+  with table size.
 - MODERATE deltas (keys ≫ n_buckets, still ≪ table): every bucket is
-  touched, so the win depends on parquet ROW-GROUP pruning via the
-  pushed `repo IN (...)` predicate over key-sorted files — real at
-  10^10 rows where each bucket file has thousands of row groups,
-  invisible here where each bucket file is one row group; expect ≈0.5×
-  in this sandbox (two full scans vs one) and record it as such.
+  touched, so the scan is table-sized; the win comes from cutting the
+  scanned rows to the interval's keys (broadcast semi-join) before the
+  LWW aggregate's shuffle, which is then ~interval-sized.
 - LARGE intervals (≥30% of table rows): refresh auto-falls-back to a
   full recompute (lake/mv.py FULL_FALLBACK_RATIO).
 
@@ -132,8 +130,7 @@ def main() -> None:
                 "speedup": round(med(full_times) / med(inc_times), 2),
                 "touched_buckets": rep["touched_buckets"],
                 "regime": "point" if rep["touched_buckets"] < args.n_buckets // 2
-                else "moderate (row-group-pruning regime at real scale; "
-                "single-row-group files here — expect <1x)",
+                else "moderate (half the buckets or more touched)",
                 "state_matches_full_recompute": True,
             }
         )

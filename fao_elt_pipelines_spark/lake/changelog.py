@@ -17,25 +17,36 @@ the upstream source. lake.mv is one such consumer specialized to
 decomposable aggregates; this is the general-purpose surface.
 
 Scale shape at 10^10 rows (the reason this is NOT ``read(a)`` full-outer
-``read(b)``):
+``read(b)``): ``interval_image`` builds both ends of the interval from
+ONE scan of the from-snapshot and ONE aggregate —
 
 - the interval's manifest entries (``_changes_entries`` — a driver-side
-  metadata walk, no data IO) name the TOUCHED BUCKETS; both images are
-  read bucket-pruned, so a delta in 1 of 64 buckets reads 2/64ths of
-  the table, not 2 full scans;
-- changed keys (distinct keys of the interval's raw rows, tombstones
-  included) further restrict each image via a semi-join — unchanged
-  keys inside touched buckets drop before the diff join, leaving the
-  full-outer diff ~interval-sized;
-- the diff compares single packed structs per side (one ``eqNullSafe``),
-  so adding columns under schema evolution never changes the plan shape.
+  metadata walk, no data IO) name the TOUCHED BUCKETS; only the
+  from-snapshot's files in those buckets are read (tagged old), unioned
+  with the interval's added files (tagged new), so a delta in 1 of 64
+  buckets reads 1/64th of the table once, not two merged images;
+- old rows of keys the interval never wrote cannot have changed; a
+  semi-join against the interval's keys drops them before any shuffle;
+- one ``groupBy(repo, path)`` LWW aggregate yields both live images of
+  every written key as packed structs: ``before`` = the max-seq old row,
+  ``after`` = the max-seq row of all of them (ties go to the new row);
+- the pairs feed the classifier directly (one ``eqNullSafe`` per key), so
+  no diff join runs and adding columns under schema evolution never
+  changes the plan shape.
+
+The LWW over (from-files ∪ interval files) IS the to-image: the
+to-snapshot's files are the from-files plus the interval's adds minus
+what compaction consumed; compaction keeps the LWW winners of what it
+consumed, and tombstone expiry only drops a tombstone whose key it
+leaves absent. A COW merge's rewritten bucket is an add carrying the
+bucket's LWW state, which wins every tie against the files it replaced.
 
 When the interval contains an operation whose retractions are not
 visible as tombstoned file-adds (``overwrite``) or whose bucket ids
-changed meaning (``rebucket``), the bucket/key restriction would be
-wrong — ``row_changes`` then falls back to a FULL diff of the two
-snapshots (both images unrestricted). Still exact, costs two scans;
-the same precondition set lake.mv uses (``INCREMENTAL_SAFE_OPS``).
+changed meaning (``rebucket``), that identity breaks — ``row_changes``
+then falls back to a FULL diff of the two snapshots (both images
+unrestricted, one full-outer join). Still exact, costs two scans; lake.mv
+uses the same precondition set (``INCREMENTAL_SAFE_OPS``).
 
 An expired ``from_snapshot_id`` raises the same ``ValueError`` as
 ``read()`` / ``changes_between`` — a resuming consumer must never
@@ -54,9 +65,27 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.diff import DELETE, INSERT, UPDATE_POST, UPDATE_PRE, image_diff
-from .mv import INCREMENTAL_SAFE_OPS, KEYS
-from .table import LakeTable
+from ..operators.diff import (
+    DELETE,
+    INSERT,
+    UPDATE_POST,
+    UPDATE_PRE,
+    classify_changes,
+    image_diff,
+)
+from .table import TOMBSTONE_COL, LakeTable
+
+KEYS = ("repo", "path")
+
+#: snapshot operations whose full state transition is visible as
+#: file-adds (+ tombstones) — the precondition of ``interval_image``.
+#: ``overwrite`` drops every prior file without writing tombstones, so
+#: its disappearing rows would never be retracted incrementally.
+#: ``rebucket`` must stay excluded even though it moves bytes only: the
+#: interval's change entries carry OLD-layout bucket ids while later
+#: snapshots are NEW-layout, so the touched-bucket pruning would read
+#: the wrong buckets — a full diff/recompute is the safe path.
+INCREMENTAL_SAFE_OPS = frozenset({"merge", "append", "compact"})
 
 
 def _tag(df: DataFrame, change_type, from_sid: int | None, to_sid: int) -> DataFrame:
@@ -108,39 +137,66 @@ def row_changes(
         # must fall through to the full diff below.
         return _empty_changelog(table)
 
-    snap_from = _find(meta, from_snapshot_id)
-
     if interval_ops <= INCREMENTAL_SAFE_OPS:
-        touched = {e["bucket"] for e in entries}
-        keys_df = (
-            table._read_entries(entries, include_tombstones=True, merged=False)
-            .select(*KEYS)
-            .distinct()
+        changes = classify_changes(
+            interval_image(table, meta, from_snapshot_id, entries), KEYS
         )
-
-        def image(snap: dict[str, Any]) -> DataFrame:
-            es = [e for e in snap["manifest"] if e["bucket"] in touched]
-            # superset of changed keys is exact here: a key whose images
-            # are identical (e.g. a late event that lost LWW) cancels in
-            # the diff below. Catalyst/AQE picks broadcast vs shuffle for
-            # the semi-join from the actual key count.
-            return table._read_entries(es).join(keys_df, list(KEYS), "left_semi")
-
     else:
         # overwrite dropped rows invisibly / rebucket renamed buckets:
-        # the restriction would miss retractions — diff the full images
-        def image(snap: dict[str, Any]) -> DataFrame:
-            return table._read_entries(snap["manifest"])
-
-    return _diff(image(snap_from), image(snap_to), from_snapshot_id, to_sid)
-
-
-def _diff(before: DataFrame, after: DataFrame, from_sid: int, to_sid: int) -> DataFrame:
-    """operators.diff.image_diff + the changelog's snapshot-id columns."""
-    return image_diff(before, after, KEYS).select(
+        # the interval identity fails — diff the two full images
+        changes = image_diff(
+            table._read_entries(_find(meta, from_snapshot_id)["manifest"]),
+            table._read_entries(snap_to["manifest"]),
+            KEYS,
+        )
+    return changes.select(
         "*",
-        F.lit(from_sid).cast("long").alias("_from_snapshot_id"),
+        F.lit(from_snapshot_id).cast("long").alias("_from_snapshot_id"),
         F.lit(to_sid).cast("long").alias("_to_snapshot_id"),
+    )
+
+
+def interval_image(
+    table: LakeTable,
+    meta: dict[str, Any],
+    from_snapshot_id: int,
+    entries: list[dict[str, Any]],
+) -> DataFrame:
+    """Both live images of every key the interval wrote, from one scan of
+    the from-snapshot.
+
+    ``entries`` are ``_changes_entries(from, to)`` of an interval whose
+    operations are all in ``INCREMENTAL_SAFE_OPS`` (see the module
+    docstring for why the result is then exact). Output = key columns +
+    ``_b`` / ``_a`` payload structs (every non-key column but the
+    tombstone flag), NULL where the key is absent — deleted or never
+    written — at the from / to snapshot. Keys come out once each, only
+    those with a row in ``entries``; equal pairs (a late event that lost
+    LWW to the from-row) are the caller's to drop.
+    """
+    touched = {e["bucket"] for e in entries}
+    old = [e for e in _find(meta, from_snapshot_id)["manifest"] if e["bucket"] in touched]
+
+    def rows(es: list[dict[str, Any]], new: bool) -> DataFrame:
+        df = table._read_entries(es, include_tombstones=True, merged=False)
+        return df.withColumn("_new", F.lit(new))
+
+    new = rows(entries, True)
+    # Old rows of keys the interval never wrote cannot have changed: drop
+    # them BEFORE the aggregate's shuffle, so it carries ~interval-sized
+    # input even when a few keys touch most buckets. AQE broadcasts the
+    # interval's keys when they are few and shuffles when they are not.
+    old_rows = rows(old, False).join(new.select(*KEYS), list(KEYS), "left_semi")
+    df = old_rows.unionByName(new)
+    payload = [c for c in df.columns if c not in (*KEYS, TOMBSTONE_COL, "_new")]
+    live = F.when(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)), F.struct(*payload))
+    # same NULL-seq rule as the MOR read-merge: append()-sourced rows rank
+    # at -1. max_by skips rows whose ordering is NULL, which keeps the new
+    # rows out of the before-image.
+    seq = F.coalesce(F.col("last_seq"), F.lit(-1).cast("long"))
+    return df.groupBy(*KEYS).agg(
+        F.max_by(live, F.when(~F.col("_new"), seq)).alias("_b"),
+        F.max_by(live, F.struct(seq, F.col("_new"))).alias("_a"),
     )
 
 

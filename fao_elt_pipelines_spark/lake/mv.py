@@ -5,23 +5,20 @@ The capstone consumer of the table's CDC surface: a gold-layer aggregate
 change interval since the last refresh, instead of re-scanning the table.
 This replaces the reference's full-recompute dbt aggregate models
 (``/root/reference/dbt/models/marts``) with classic delta-based
-incremental view maintenance:
+incremental view maintenance, as a signed-delta fold:
 
-    new_agg(repo) = old_agg(repo) − contrib(before-image of changed keys)
-                                  + contrib(after-image of changed keys)
+    new_agg(repo) = old_agg(repo) + Σ contrib(after-image of changed keys)
+                                  − Σ contrib(before-image of changed keys)
 
 Cost per refresh at 10^10-row scale:
 
-- changed keys come from ``changes_between`` — O(files the interval
-  added), no shuffle;
-- before/after images are read at the cursor / head snapshots via
-  time travel, pruned three ways: to the TOUCHED BUCKETS (manifest
-  entries of the interval carry bucket ids), to the files whose
-  manifest repo-bounds intersect the changed-repo set, and — for a
-  bounded changed-repo set — by a literal ``repo IN (...)`` predicate
-  that reaches parquet row-group stats AND passes through the MOR
-  read-merge aggregate, so the LWW merge runs over ~interval-sized
-  input rather than the touched buckets' full contents;
+- both images come from ``changelog.interval_image``: the cursor
+  snapshot's files in the interval's TOUCHED BUCKETS, read once and cut
+  to the interval's keys, plus the interval's added files, LWW-resolved
+  by one aggregate that yields each changed key's before AND after
+  image — no second image read and no join back to base state;
+- the signed per-key contributions (+after − before) union with the old
+  state and fold in one per-repo sum;
 - when the interval rewrote ≥30% of the table, or contains an
   operation whose dropped rows are not visible as tombstoned file-adds
   (``overwrite``), refresh auto-falls-back to a full recompute —
@@ -68,36 +65,12 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .changelog import INCREMENTAL_SAFE_OPS, _interval_ops, interval_image
 from .table import LakeTable
-
-KEYS = ("repo", "path")
-
-#: snapshot operations whose full state transition is visible as
-#: file-adds (+ tombstones) — the precondition of the delta algebra.
-#: ``overwrite`` drops every prior file without writing tombstones, so
-#: its disappearing rows would never be retracted incrementally.
-#: ``rebucket`` must stay excluded even though it moves bytes only: the
-#: interval's change entries carry OLD-layout bucket ids while the head
-#: snapshot is NEW-layout, so the touched-bucket image pruning below
-#: would read the wrong buckets — full recompute is the safe path.
-INCREMENTAL_SAFE_OPS = frozenset({"merge", "append", "compact"})
 
 
 class MVCommitConflict(RuntimeError):
     """Two refreshes raced for the same state version; retry the loser."""
-
-
-def _any_repo_in_bounds(entry: dict[str, Any], repos_sorted: list[str]) -> bool:
-    """Manifest-level file prune: does the file's [min, max] repo range
-    contain ANY changed repo? Conservative (no stats → keep). Binary
-    search keeps the driver-side walk O(files · log repos)."""
-    import bisect
-
-    rng = (entry.get("stats") or {}).get("repo")
-    if not rng:
-        return True
-    i = bisect.bisect_left(repos_sorted, rng[0])
-    return i < len(repos_sorted) and repos_sorted[i] <= rng[1]
 
 
 def _contrib(df: DataFrame) -> DataFrame:
@@ -112,13 +85,11 @@ def _contrib(df: DataFrame) -> DataFrame:
 
 class IncrementalGoldView:
     #: interval rows ≥ this fraction of table rows → full recompute is
-    #: cheaper than reading restricted images of two snapshots. Cost
+    #: cheaper than the interval image (the touched buckets' files at the
+    #: cursor snapshot plus the interval's adds, LWW-aggregated). Cost
     #: heuristic only — correctness never depends on it (non-retractable
     #: operations are detected explicitly via INCREMENTAL_SAFE_OPS).
     FULL_FALLBACK_RATIO = 0.3
-    #: changed-repo cap for the driver-collected InSet pushdown; above it
-    #: the collect itself would dominate and the plain semi-join wins
-    MAX_PUSHDOWN_REPOS = 20_000
     #: state versions (markers + their data dirs) retained by GC
     KEEP_VERSIONS = 2
 
@@ -280,8 +251,6 @@ class IncrementalGoldView:
         # carry unpublished WAP/staging commits whose op — e.g. a staged
         # overwrite — never affected this lineage; counting them would
         # force a spurious full recompute every refresh until expiry)
-        from .changelog import _interval_ops
-
         interval_ops = _interval_ops(self.table, meta, from_sid, to_sid)
         if not interval_ops <= INCREMENTAL_SAFE_OPS:
             # e.g. overwrite: drops rows without tombstoned file-adds, so
@@ -295,107 +264,41 @@ class IncrementalGoldView:
             return {"mode": "noop", "from": from_sid, "to": to_sid}
 
         # When the interval rewrote a large fraction of the table, the
-        # delta algebra costs MORE than recomputing (it reads restricted
-        # images of TWO snapshots): recompute instead.
+        # interval image costs MORE than recomputing: recompute instead.
         interval_rows = sum(e["rows"] for e in entries)
         table_rows = max(1, sum(e["rows"] for e in snap["manifest"]))
         if interval_rows >= self.FULL_FALLBACK_RATIO * table_rows:
             return recompute("large interval")
-        touched = {e["bucket"] for e in entries}
 
-        # changed keys: superset is fine (unchanged keys cancel in the
-        # before/after algebra), so raw change rows need only the key
-        # cols. Persisted: consumed three times (repo collect + two
-        # semi-joins) and the interval scan shouldn't run thrice.
-        keys = (
-            self.table._read_entries(entries, include_tombstones=True, merged=False)
-            .select(*KEYS)
-            .distinct()
-            .persist()
+        img = interval_image(self.table, meta, from_sid, entries)
+
+        def n_paths(side: str):
+            return F.col(side).isNotNull().cast("long")
+
+        def n_bytes(side: str):  # 0 for an absent image, like _contrib's coalesce
+            return F.octet_length(F.coalesce(F.col(f"{side}.content"), F.lit(""))).cast("long")
+
+        delta = img.select(
+            "repo",
+            (n_paths("_a") - n_paths("_b")).alias("n_paths"),
+            (n_bytes("_a") - n_bytes("_b")).alias("total_bytes"),
         )
-        try:
-            # For a bounded changed-repo set, turn the key set into a
-            # literal InSet predicate: it reaches the parquet scan
-            # (row-group stats pruning over key-sorted files) AND passes
-            # through the MOR read-merge aggregate (filter on a grouping
-            # key), so the LWW merge runs over ~interval-sized input
-            # instead of the touched buckets' full contents. Above the
-            # cap the driver-side collect would be the bottleneck — rely
-            # on the plain semi-join (AQE picks broadcast vs shuffle from
-            # the actual key count).
-            repos = [
-                r["repo"]
-                for r in keys.select("repo")
-                .distinct()
-                .limit(self.MAX_PUSHDOWN_REPOS + 1)
-                .collect()
-            ]
-            pred = None
-            repos_sorted = None
-            if len(repos) <= self.MAX_PUSHDOWN_REPOS:
-                pred = F.col("repo").isin(repos)
-                repos_sorted = sorted(repos)
-            old_snap = next(
-                s for s in meta["snapshots"] if s["snapshot_id"] == from_sid
-            )
-
-            def image(s: dict[str, Any]) -> DataFrame:
-                es = [e for e in s["manifest"] if e["bucket"] in touched]
-                if repos_sorted is not None:
-                    es = [e for e in es if _any_repo_in_bounds(e, repos_sorted)]
-                df = self.table._read_entries(es)
-                if pred is not None:
-                    df = df.filter(pred)
-                # Join strategy stays with Catalyst/AQE: a small
-                # interval's key set broadcasts on its own; a huge one
-                # must NOT be force-broadcast.
-                return df.join(keys, list(KEYS), "left_semi")
-
-            before = image(old_snap)
-            after = image(snap)
-            delta = (
-                _contrib(after)
-                .withColumnRenamed("n_paths", "a_n")
-                .withColumnRenamed("total_bytes", "a_b")
-                .join(
-                    _contrib(before)
-                    .withColumnRenamed("n_paths", "b_n")
-                    .withColumnRenamed("total_bytes", "b_b"),
-                    ["repo"],
-                    "full_outer",
-                )
-            )
-            z = F.lit(0).cast("long")
-            # base state pinned to the SAME cursor the delta was computed
-            # against — self.read() would re-resolve the cursor at
-            # construction time and could mix a newer base with our
-            # (from_sid, to_sid] delta
-            base_state = self.spark.read.parquet(
-                os.path.join(self.state_dir, cur["dir"])
-            )
-            merged = (
-                base_state
-                .join(delta, ["repo"], "full_outer")
-                .select(
-                    "repo",
-                    (
-                        F.coalesce("n_paths", z) + F.coalesce("a_n", z) - F.coalesce("b_n", z)
-                    ).alias("n_paths"),
-                    (
-                        F.coalesce("total_bytes", z)
-                        + F.coalesce("a_b", z)
-                        - F.coalesce("b_b", z)
-                    ).alias("total_bytes"),
-                )
-                .filter(F.col("n_paths") > 0)
-            )
-            self._commit_state(merged, to_sid, base_version=cur["version"])
-        finally:
-            keys.unpersist()
+        # base state pinned to the SAME cursor the delta was computed
+        # against — self.read() would re-resolve the cursor at
+        # construction time and could mix a newer base with our
+        # (from_sid, to_sid] delta
+        base_state = self.spark.read.parquet(os.path.join(self.state_dir, cur["dir"]))
+        merged = (
+            base_state.unionByName(delta)
+            .groupBy("repo")
+            .agg(F.sum("n_paths").alias("n_paths"), F.sum("total_bytes").alias("total_bytes"))
+            .filter(F.col("n_paths") > 0)
+        )
+        self._commit_state(merged, to_sid, base_version=cur["version"])
         return {
             "mode": "incremental",
             "from": from_sid,
             "to": to_sid,
-            "touched_buckets": len(touched),
+            "touched_buckets": len({e["bucket"] for e in entries}),
             "n_buckets": meta["n_buckets"],
         }

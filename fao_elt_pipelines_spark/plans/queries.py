@@ -292,10 +292,10 @@ def q_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iceberg ``changes`` / Delta CDF semantics): diff the LWW state at the
     mid-stream watermark against the final state, classifying each
     changed key as insert / delete / update_preimage / update_postimage.
-    Runs the production diff operator (lake/changelog._diff — one
+    Runs the production diff operator (operators/diff.image_diff — one
     full-outer join, one struct equality, one explode); the oracle
     re-derives the same stream as four set operations in SQL."""
-    from ..lake.changelog import _diff
+    from ..operators.diff import image_diff
 
     b = _derived_binlog(spark, sf_dir)
     wm = int(b.agg(F.max("seq")).collect()[0][0]) // 2
@@ -311,7 +311,7 @@ def q_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    ch = _diff(state(b.filter(F.col("seq") <= wm)), state(b), 0, 1)
+    ch = image_diff(state(b.filter(F.col("seq") <= wm)), state(b), ("repo", "path"))
     return ch.select(
         "repo", "path", "commit", "lang", "content_sha256", "last_seq",
         F.col("_change_type").alias("change_type"),
@@ -385,8 +385,8 @@ def q_cdc_epoch_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance as a differential query —
     the pure-DataFrame twin of lake/mv.py's refresh algebra (which the
-    engine runs over changes_between + time-travel before-images; see
-    tests/test_mv.py for the lake-backed path).
+    engine runs as a signed-delta fold over the changelog's one-scan
+    interval image; see tests/test_mv.py for the lake-backed path).
 
     Build the per-repo gold aggregate over the first half of the stream,
     then advance it to the full stream by the delta rule

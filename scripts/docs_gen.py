@@ -80,6 +80,8 @@ def registry_nodes(spark, sf_dir: str) -> list[dict]:
     nodes = []
     for name in sorted(REGISTRY):
         fn, sql = REGISTRY[name]
+        if callable(sql):  # resolved like __spark_entry__.oracle_sql: None → rows-only
+            sql = sql()
         df = fn(spark, sf_dir)
         nodes.append(
             {

@@ -20,6 +20,8 @@ from fao_elt_pipelines_spark.lake.checkpoint import CheckpointStore
 from fao_elt_pipelines_spark.lake.replay import replay
 from fao_elt_pipelines_spark.lake.table import LakeTable
 
+from tests.interval_cases import INTERVAL_CASES
+from tests.plan_utils import plan_of
 from tests.test_engine_core import STATE_SCHEMA
 
 KEYS = ("repo", "path")
@@ -83,6 +85,28 @@ def test_changelog_equals_brute_state_diff(spark, cl_events, tmp_path, mode):
         .collect()
     )
     assert pairs and all(sorted(r["ts"]) == [UPDATE_POST, UPDATE_PRE] for r in pairs)
+
+
+@pytest.mark.parametrize("case", sorted(INTERVAL_CASES))
+def test_interval_image_equals_brute_state_diff(spark, cl_events, tmp_path, case):
+    """The one-scan interval image (from-snapshot files of the touched
+    buckets ∪ the interval's added files) must classify exactly like a
+    diff of the two snapshot states, including intervals whose
+    to-snapshot files differ from that union — and without a diff join."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), STATE_SCHEMA, n_buckets=8)
+    ck = CheckpointStore(str(tmp_path / "ckpt.json"))
+    replay(spark, cl_events, table, ck, mode="mor")
+    sid1 = table.current_snapshot()["snapshot_id"]
+    before = _state_rows(table.read(snapshot_id=sid1))
+    INTERVAL_CASES[case](spark, table)
+    sid2 = table.current_snapshot()["snapshot_id"]
+    after = _state_rows(table.read(snapshot_id=sid2))
+
+    ch = row_changes(table, sid1, sid2)
+    assert "FullOuter" not in plan_of(ch)
+    got = _changelog_rows(ch)
+    assert got == _brute_diff(before, after)
+    assert (not got) == (case == "late_events_lose")
 
 
 def test_apply_reconstructs_after_image(spark, cl_events, tmp_path):
@@ -174,7 +198,9 @@ def test_overwrite_interval_falls_back_to_full_diff(spark, cl_events, tmp_path):
     after = _state_rows(table.read(snapshot_id=sid2))
     assert len(after) == 100 and len(before) > 100
 
-    assert _changelog_rows(row_changes(table, sid1, sid2)) == _brute_diff(before, after)
+    ch = row_changes(table, sid1, sid2)
+    assert "FullOuter" in plan_of(ch)  # the two-image fallback, not the interval image
+    assert _changelog_rows(ch) == _brute_diff(before, after)
 
 
 def test_replicate_mirrors_source_exactly_once(spark, cl_events, tmp_path):

@@ -1,8 +1,7 @@
-"""Incremental materialized-view maintenance (lake/mv.py): the delta
-algebra over changes_between + time-travel before-images must equal a
-full recompute over the merged table — including deletes — in both COW
-and MOR modes, and the incremental refresh must read only touched
-buckets."""
+"""Incremental materialized-view maintenance (lake/mv.py): the signed-delta
+fold over the changelog's interval image must equal a full recompute over
+the merged table — including deletes — in both COW and MOR modes, and the
+incremental refresh must read only touched buckets."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +12,7 @@ from fao_elt_pipelines_spark.lake.mv import IncrementalGoldView, _contrib
 from fao_elt_pipelines_spark.lake.replay import replay
 from fao_elt_pipelines_spark.lake.table import LakeTable
 
+from tests.interval_cases import INTERVAL_CASES
 from tests.test_engine_core import STATE_SCHEMA
 
 
@@ -90,6 +90,26 @@ def test_refresh_reads_touched_buckets_only(spark, mv_events, tmp_path, mode):
     assert rep["touched_buckets"] == 1
     assert _rows(view.read()) == _rows(_contrib(table.read()))
     assert view.read().filter("repo = 'solo_repo'").count() == 1
+
+
+@pytest.mark.parametrize("case", sorted(INTERVAL_CASES))
+def test_incremental_refresh_over_interval_cases(spark, mv_events, tmp_path, case):
+    """Compaction (with and without tombstone expiry), delete + re-insert,
+    late events and multi-generation intervals: the incremental refresh
+    must equal a full recompute, and an interval of LWW losers must leave
+    the view unchanged."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), STATE_SCHEMA, n_buckets=8)
+    ck = CheckpointStore(str(tmp_path / "ckpt.json"))
+    view = IncrementalGoldView(spark, table, str(tmp_path / "mv"))
+    replay(spark, mv_events, table, ck, mode="mor")
+    view.refresh()
+    old = _rows(view.read())
+
+    INTERVAL_CASES[case](spark, table)
+    assert view.refresh()["mode"] == "incremental"
+    got = _rows(view.read())
+    assert got == _rows(_contrib(table.read()))
+    assert (got == old) == (case == "late_events_lose")
 
 
 def test_refresh_falls_back_to_full_on_expired_cursor(spark, mv_events, tmp_path):
