@@ -69,6 +69,11 @@ from .changelog import INCREMENTAL_SAFE_OPS, _interval_ops, interval_image
 from .table import LakeTable
 
 
+#: schema of the view state, passed to every state read so Spark never runs
+#: a footer-inference job for a schema this module wrote itself
+STATE_SCHEMA = "repo string, n_paths bigint, total_bytes bigint"
+
+
 class MVCommitConflict(RuntimeError):
     """Two refreshes raced for the same state version; retry the loser."""
 
@@ -124,10 +129,13 @@ class IncrementalGoldView:
         """Current view contents: (repo, n_paths, total_bytes)."""
         cur = self.cursor()
         if cur is None:
-            return self.spark.createDataFrame(
-                [], "repo string, n_paths bigint, total_bytes bigint"
-            )
-        return self.spark.read.parquet(os.path.join(self.state_dir, cur["dir"]))
+            return self.spark.createDataFrame([], STATE_SCHEMA)
+        return self._read_state(cur)
+
+    def _read_state(self, cur: dict[str, Any]) -> DataFrame:
+        return self.spark.read.schema(STATE_SCHEMA).parquet(
+            os.path.join(self.state_dir, cur["dir"])
+        )
 
     def _commit_marker(self, version: int, payload: dict[str, Any]) -> None:
         """CAS half of the commit: exclusive-create the version marker,
@@ -287,7 +295,7 @@ class IncrementalGoldView:
         # against — self.read() would re-resolve the cursor at
         # construction time and could mix a newer base with our
         # (from_sid, to_sid] delta
-        base_state = self.spark.read.parquet(os.path.join(self.state_dir, cur["dir"]))
+        base_state = self._read_state(cur)
         merged = (
             base_state.unionByName(delta)
             .groupBy("repo")

@@ -99,10 +99,66 @@ def bucket_expr(n_buckets: int, key_cols: tuple[str, str] = ("repo", "path")) ->
     writes are skew-free by construction. The trade-off (no repo-level
     partition pruning for readers) is the right one for a CDC sink whose
     dominant access is key-bucket MERGE; repo-level analytics run on the
-    aggregate outputs, not the base table scan.
+    aggregate outputs, not the base table scan. ``bucket_of`` is the
+    driver-side twin for one literal key.
     """
     keys = [F.col(c) if isinstance(c, str) else c for c in key_cols]
     return F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5, _M64 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5, (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as unsigned 64 bits — the algorithm behind Spark's
+    ``xxhash64`` (little-endian lanes, the seed chained between columns)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh64_round(v[j], int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(key: tuple[str | None, ...], n_buckets: int) -> int:
+    """The bucket ``bucket_expr`` assigns to one literal string key,
+    computed on the driver: XXH64 over each non-NULL component's UTF-8
+    bytes, seeded 42 and chained, then ``pmod`` of the signed result."""
+    h = 42
+    for v in key:
+        if v is not None:
+            h = _xxh64(v.encode("utf-8"), h)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 def _stats_overlap(entry: dict[str, Any], col: str, lo: Any, hi: Any) -> bool:
@@ -604,8 +660,9 @@ class LakeTable:
     def lookup(self, repo: str, path: str) -> DataFrame:
         """Point lookup by full merge key — the CDC state-store read path.
 
-        Hashes (repo, path) to its bucket with the SAME expression the
-        writer uses (bucket_expr), then scans only that bucket's files:
+        Hashes (repo, path) to its bucket on the driver with the writer's
+        own rule (``bucket_of``, the twin of bucket_expr; no Spark job),
+        then scans only that bucket's files:
         O(1/n_buckets) of the table regardless of total size, so a point
         read against 10^10 rows touches one bucket's parquet (further
         pruned by parquet row-group stats under the exact filter pushed
@@ -613,8 +670,8 @@ class LakeTable:
         exclude the key are skipped without opening them (Iceberg-style
         file-level stats pruning) — under the sorted-merge strategy files
         are key-sorted, so a lookup typically opens one file per snapshot
-        generation, not the whole bucket. The one-row bucket-hash job is a
-        driver scalar, not a data-path collect.
+        generation, not the whole bucket. The scan is the only Spark work a
+        lookup does.
 
         Snapshot isolation: ONE metadata load supplies both the snapshot
         and the bucket count, and the count comes from the snapshot's own
@@ -629,11 +686,7 @@ class LakeTable:
             else None
         )
         n_buckets = (snap or {}).get("n_buckets") or meta["n_buckets"]
-        b = int(
-            self.spark.range(1)
-            .select(bucket_expr(n_buckets, (F.lit(repo), F.lit(path))).alias("b"))
-            .first()["b"]
-        )
+        b = bucket_of((repo, path), n_buckets)
         entries = [
             e
             for e in (snap["manifest"] if snap else [])
@@ -739,13 +792,17 @@ class LakeTable:
 
         Bucketing hashes the FULL (repo, path) key (skew-free merges; see
         bucket_expr), so a repo's rows span every bucket and bucket pruning
-        can't help here. But under the sorted-merge strategy each bucket's
-        files are key-sorted contiguous ranges, so the per-file repo bounds
-        collected at write time prune the file list to ~1 file per bucket
-        per snapshot generation for an equality scan — O(n_buckets) files
-        opened out of the whole table, independent of table size. ``hi``
-        defaults to ``lo`` (single-repo scan). Conservative: files without
-        stats are always read."""
+        can't help here. File pruning by the manifest's per-file repo
+        bounds only helps when files cover narrow repo ranges: a bucket's
+        file holds keys of every repo the batch touched, so in practice
+        (e.g. 1000 repos over 16 buckets) every file spans nearly the whole
+        repo range and is opened. What prunes is the row filter: it
+        references only the LWW aggregate's grouping keys, so it is pushed
+        below the aggregate into the parquet scan — only matching rows are
+        shuffled — and at scale the files' key-sorted row groups let
+        parquet min/max stats skip most of each file. ``hi`` defaults to
+        ``lo`` (single-repo scan). Conservative: files without stats are
+        always read."""
         hi = lo if hi is None else hi
         snap = self.current_snapshot()
         entries = [

@@ -993,7 +993,19 @@ _KCOS = (
     " / g.kept_nrms[list_position(g.kept_vecs, kv)] / e.nrm"
 )
 
-@functools.lru_cache(maxsize=1)
+def _oracle_embeddings() -> str | None:
+    """Resolved path of the oracle corpus' embeddings, or None when the
+    fixture is absent. Read per call: the oracles below cache per PATH,
+    so pointing SPARK_GRAFT_SF_ORACLE_DIR_TEST elsewhere (or the fixture
+    appearing later) can never return an oracle trained on another
+    corpus."""
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_ORACLE_DIR_TEST", "/root/testdata/sf0.01"
+    )
+    path = os.path.realpath(os.path.join(sf_dir, "embeddings.parquet"))
+    return path if os.path.exists(path) else None
+
+
 def sql_semantic_dedup() -> str | None:
     """Lazy DuckDB oracle for semantic_dedup over TRAINED cells: counts
     the oracle corpus, derives the same k = semantic_cell_k(n), retrains
@@ -1001,14 +1013,14 @@ def sql_semantic_dedup() -> str | None:
     the Spark path's — see sql_ann_kmeans_topk, same seam), then replays
     cell assignment + the greedy keep/drop recurrence entirely in SQL.
     Returns None when the oracle fixture is absent (rows-only degrade)."""
+    path = _oracle_embeddings()
+    return _semantic_dedup_sql_for(path) if path else None
+
+
+@functools.lru_cache(maxsize=2)
+def _semantic_dedup_sql_for(path: str) -> str | None:
     import duckdb
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SF_ORACLE_DIR_TEST", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
-        return None
     con = duckdb.connect()
     try:
         n = con.execute(
@@ -1576,7 +1588,6 @@ def q_ann_kmeans_topk(spark: SparkSession, sf_dir: str, k: int = 16,
     )
 
 
-@functools.lru_cache(maxsize=1)
 def sql_ann_kmeans_topk() -> str | None:
     """DuckDB oracle for ann_kmeans_topk, generated lazily (the registry
     stores this CALLABLE; __spark_entry__.oracle_sql resolves it).
@@ -1599,14 +1610,14 @@ def sql_ann_kmeans_topk() -> str | None:
     tests/test_entry_oracle.py both compare at); returns None when that
     fixture is absent so the entry degrades to the rows-only check
     instead of breaking import."""
+    path = _oracle_embeddings()
+    return _ann_kmeans_topk_sql_for(path) if path else None
+
+
+@functools.lru_cache(maxsize=2)
+def _ann_kmeans_topk_sql_for(path: str) -> str:
     import duckdb
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SF_ORACLE_DIR_TEST", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
-        return None
     con = duckdb.connect()
     try:
         rows = con.execute(

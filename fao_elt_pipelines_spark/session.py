@@ -10,6 +10,10 @@ same builder works unchanged on a 1000-executor cluster:
 - shuffle partitions ∝ cores (not the 200 default) — at cluster scale this
   is set ∝ total executor cores by the submitter.
 - Arrow enabled — every Python-side stage is a vectorized pandas UDF.
+- no file-listing jobs: the table manifest already names every data file,
+  so Spark's parallel "list leaf files" job (one task per path, run for any
+  read of more than 32 paths by default) is disabled — paths are statted on
+  the driver instead.
 """
 
 from __future__ import annotations
@@ -89,6 +93,9 @@ def get_spark(
         # Parquet writer: large row groups for scan throughput at 100 TB.
         .config("spark.sql.files.maxPartitionBytes", str(256 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # Reads name their files from the table manifest; above this many
+        # paths Spark would run a Spark job just to stat them.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     )
     for k, v in {**PROFILES[profile], **(extra_conf or {})}.items():
         builder = builder.config(k, v)

@@ -53,12 +53,17 @@ def test_gen_slices_mode_end_to_end(tmp_path):
         ],
         capture_output=True, text=True, cwd=REPO, timeout=560,
     )
-    assert out.returncode == 0, out.stderr[-3000:]
-    doc = json.loads(out.stdout.strip().splitlines()[-1])
-    assert doc["pass"] is True
-    assert doc["per_repo_match"] and doc["sample_hash_match"] and doc["mv_match"]
-    assert doc["replay"]["gen_slices"] == 2
-    assert doc["replay"]["epochs_applied"] == [0, 1, 2, 3]
-    assert doc["replay"]["events_in"] == 100_000
-    # artifact name is scale-exact (1e5), never the 1e8 flagship's
-    os.remove(os.path.join(REPO, "BENCH", "validate_1e5.json"))
+    # artifact name is scale-exact (1e5), never the 1e8 flagship's; removed
+    # whatever the assertions say, so a failure leaves no stray file
+    artifact = os.path.join(REPO, "BENCH", "validate_1e5.json")
+    try:
+        assert out.returncode == 0, out.stderr[-3000:]
+        doc = json.loads(out.stdout.strip().splitlines()[-1])
+        assert doc["pass"] is True
+        assert doc["per_repo_match"] and doc["sample_hash_match"] and doc["mv_match"]
+        assert doc["replay"]["gen_slices"] == 2
+        assert doc["replay"]["epochs_applied"] == [0, 1, 2, 3]
+        assert doc["replay"]["events_in"] == 100_000
+    finally:
+        if os.path.exists(artifact):
+            os.remove(artifact)
