@@ -73,9 +73,7 @@ from ..operators.diff import (
     classify_changes,
     image_diff,
 )
-from .table import TOMBSTONE_COL, LakeTable
-
-KEYS = ("repo", "path")
+from .table import KEYS, TOMBSTONE_COL, LakeTable
 
 #: snapshot operations whose full state transition is visible as
 #: file-adds (+ tombstones) — the precondition of ``interval_image``.
@@ -117,15 +115,13 @@ def row_changes(
     semantics (no ordering guarantee); updates emit exactly two rows.
     """
     meta = table._load_metadata()
-    to_sid = (
-        to_snapshot_id if to_snapshot_id is not None else meta["current_snapshot_id"]
-    )
-    if to_sid is None:  # empty table, nothing ever committed
-        return _empty_changelog(table)
-    snap_to = _find(meta, to_sid)
+    snap_to = LakeTable._snapshot(meta, to_snapshot_id)
+    if snap_to is None:  # empty table, nothing ever committed
+        return _empty_changelog(table, meta)
+    to_sid = snap_to["snapshot_id"]
 
     if from_snapshot_id is None:
-        return _tag(table._read_entries(snap_to["manifest"]), INSERT, None, to_sid)
+        return _tag(table._read_entries(meta, snap_to["manifest"]), INSERT, None, to_sid)
 
     # validates the cursor: raises on an expired/unknown from-snapshot
     entries = table._changes_entries(from_snapshot_id, to_sid, meta=meta)
@@ -135,7 +131,7 @@ def row_changes(
         # logical change): emit nothing without scanning anything. An
         # overwrite can drop every row while adding zero files, so it
         # must fall through to the full diff below.
-        return _empty_changelog(table)
+        return _empty_changelog(table, meta)
 
     if interval_ops <= INCREMENTAL_SAFE_OPS:
         changes = classify_changes(
@@ -145,8 +141,8 @@ def row_changes(
         # overwrite dropped rows invisibly / rebucket renamed buckets:
         # the interval identity fails — diff the two full images
         changes = image_diff(
-            table._read_entries(_find(meta, from_snapshot_id)["manifest"]),
-            table._read_entries(snap_to["manifest"]),
+            table._read_entries(meta, LakeTable._snapshot(meta, from_snapshot_id)["manifest"]),
+            table._read_entries(meta, snap_to["manifest"]),
             KEYS,
         )
     return changes.select(
@@ -175,10 +171,11 @@ def interval_image(
     LWW to the from-row) are the caller's to drop.
     """
     touched = {e["bucket"] for e in entries}
-    old = [e for e in _find(meta, from_snapshot_id)["manifest"] if e["bucket"] in touched]
+    from_snap = LakeTable._snapshot(meta, from_snapshot_id)
+    old = [e for e in from_snap["manifest"] if e["bucket"] in touched]
 
     def rows(es: list[dict[str, Any]], new: bool) -> DataFrame:
-        df = table._read_entries(es, include_tombstones=True, merged=False)
+        df = table._read_entries(meta, es, include_tombstones=True, merged=False)
         return df.withColumn("_new", F.lit(new))
 
     new = rows(entries, True)
@@ -365,19 +362,10 @@ def _seq_hi(meta: dict[str, Any], sid: int) -> int:
     never a snapshot id."""
     his = [
         e["stats"]["last_seq"][1]
-        for e in _find(meta, sid)["manifest"]
+        for e in LakeTable._snapshot(meta, sid)["manifest"]
         if e.get("stats", {}).get("last_seq")
     ]
     return int(max(his)) if his else 0
-
-
-def _find(meta: dict[str, Any], sid: int) -> dict[str, Any]:
-    snap = next((s for s in meta["snapshots"] if s["snapshot_id"] == sid), None)
-    if snap is None:
-        raise ValueError(
-            f"snapshot {sid} not found (expired by expire_snapshots, or never existed)"
-        )
-    return snap
 
 
 def _interval_ops(
@@ -393,6 +381,6 @@ def _interval_ops(
     }
 
 
-def _empty_changelog(table: LakeTable) -> DataFrame:
-    empty = table._read_entries([])
+def _empty_changelog(table: LakeTable, meta: dict[str, Any]) -> DataFrame:
+    empty = table._read_entries(meta, [])
     return _tag(empty, F.lit(None).cast("string"), None, -1).limit(0)

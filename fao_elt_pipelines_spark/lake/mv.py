@@ -231,14 +231,14 @@ class IncrementalGoldView:
         # consistent view, so concurrent commits/expiry can't desync the
         # aggregated state from the cursor we commit.
         meta = self.table._load_metadata()
-        to_sid = meta["current_snapshot_id"]
+        snap = self.table._snapshot(meta)
         cur = self.cursor()
-        if to_sid is None:
+        if snap is None:
             return {"mode": "noop", "reason": "empty table"}
-        snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == to_sid)
+        to_sid = snap["snapshot_id"]
 
         def recompute(reason: str | None = None) -> dict[str, Any]:
-            self._commit_state(_contrib(self.table._read_entries(snap["manifest"])), to_sid)
+            self._commit_state(_contrib(self.table._read_entries(meta, snap["manifest"])), to_sid)
             out = {"mode": "full", "to": to_sid}
             return {**out, "reason": reason} if reason else out
 

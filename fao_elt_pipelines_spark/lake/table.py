@@ -63,9 +63,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import schema_evo
+from .bloom import TOKEN_SEP
 from .bloom import probe as _bloom_probe
 
 STATE_COLUMNS = ["repo", "path", "commit", "lang", "content", "content_sha256", "last_seq"]
+
+#: the MERGE key: bucketing hashes it, and every image of a key (base
+#: row, newer delta, tombstone) carries the same values in these columns
+KEYS = ("repo", "path")
 
 #: physical-only column marking delete winners. Tombstones make MERGE
 #: order-insensitive ACROSS batches: an old insert re-delivered after a
@@ -385,8 +390,9 @@ class LakeTable:
         meta = self._load_metadata()
         return self._ancestry(meta, self._head(meta, ref))
 
-    def _head(self, meta: dict[str, Any], ref: str) -> int | None:
-        refs = self._refs(meta)
+    @staticmethod
+    def _head(meta: dict[str, Any], ref: str) -> int | None:
+        refs = LakeTable._refs(meta)
         if ref not in refs:
             raise ValueError(f"unknown ref {ref!r}; have {sorted(refs)}")
         return refs[ref]["snapshot_id"]
@@ -406,12 +412,45 @@ class LakeTable:
         chain.reverse()
         return chain
 
-    def current_snapshot(self, ref: str = "main") -> dict[str, Any] | None:
-        meta = self._load_metadata()
-        sid = self._head(meta, ref)
+    @staticmethod
+    def _snapshot(
+        meta: dict[str, Any],
+        snapshot_id: int | None = None,
+        ref: str = "main",
+        as_of_ms: int | None = None,
+    ) -> dict[str, Any] | None:
+        """The one map from an explicit snapshot id, a ref head, or FOR
+        TIMESTAMP AS OF (``as_of_ms``: the latest snapshot on ``ref``'s
+        ancestry committed at or before that wall-clock ms) to a snapshot
+        entry of ``meta``. None = no snapshot on the ref (empty table); an
+        unknown or expired id raises."""
+        if snapshot_id is not None:
+            sid = snapshot_id
+        elif as_of_ms is not None:
+            chain = [
+                s
+                for s in LakeTable._ancestry(meta, LakeTable._head(meta, ref))
+                if s["timestamp_ms"] <= as_of_ms
+            ]
+            if not chain:
+                raise ValueError(
+                    f"no snapshot on {ref!r} at or before {as_of_ms} "
+                    "(before table history, or expired)"
+                )
+            sid = chain[-1]["snapshot_id"]
+        else:
+            sid = LakeTable._head(meta, ref)
         if sid is None:
             return None
-        return next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
+        snap = next((s for s in meta["snapshots"] if s["snapshot_id"] == sid), None)
+        if snap is None:
+            raise ValueError(
+                f"snapshot {sid} not found (expired by expire_snapshots, or never existed)"
+            )
+        return snap
+
+    def current_snapshot(self, ref: str = "main") -> dict[str, Any] | None:
+        return self._snapshot(self._load_metadata(), ref=ref)
 
     def committed_epochs(self, ref: str = "main", source: str | None = None) -> set[int]:
         """Epoch ids the exactly-once skip treats as done: those committed
@@ -465,9 +504,8 @@ class LakeTable:
         refs = self._refs(meta)
         if name in refs and not (reset and refs[name]["type"] == "branch"):
             raise ValueError(f"ref {name!r} already exists")
-        sid = at_snapshot_id if at_snapshot_id is not None else meta["current_snapshot_id"]
-        if sid is not None and not any(s["snapshot_id"] == sid for s in meta["snapshots"]):
-            raise ValueError(f"snapshot {sid} not found (expired, or never existed)")
+        snap = self._snapshot(meta, at_snapshot_id)
+        sid = snap["snapshot_id"] if snap else None
         if kind == "tag" and sid is None:
             raise ValueError("a tag must point at a snapshot; the table is empty")
         refs[name] = {"snapshot_id": sid, "type": kind}
@@ -531,12 +569,14 @@ class LakeTable:
     # --------------------------------------------------------------- read
     def _read_entries(
         self,
+        meta: dict[str, Any],
         entries: list[dict[str, Any]],
         include_tombstones: bool = False,
         merged: bool = True,
-        keys: tuple[str, str] = ("repo", "path"),
     ) -> DataFrame:
-        """Read manifest entries as a DataFrame.
+        """Read manifest entries as a DataFrame, typed by the logical schema
+        of ``meta`` — the caller's pinned metadata load, so the entries and
+        the schema describe one table version.
 
         ``merged=True`` applies read-time LWW across base+delta files
         (merge-on-read): per key, the row with max last_seq wins — a
@@ -549,8 +589,7 @@ class LakeTable:
         table, not all of it. ``merged=False`` returns raw physical rows
         (used internally by COW merge and compact, which do their own LWW
         in the single write shuffle)."""
-        logical = self.schema()
-        phys = self._physical_schema(logical)
+        phys = self._physical_schema(schema_evo.registry_to_schema(meta["schema"]))
 
         def raw(es: list[dict[str, Any]]) -> DataFrame:
             if not es:
@@ -562,7 +601,7 @@ class LakeTable:
         touched, clean = self._split_entries_by_delta(entries)
         if merged and touched:
             mdf = raw(touched)
-            payload = [c for c in mdf.columns if c not in keys]
+            payload = [c for c in mdf.columns if c not in KEYS]
             # NULL-safe ordering: append()-sourced rows carry last_seq NULL
             # (schema_evo backfill). max_by skips NULL-ordered rows, so a
             # group whose rows are ALL appended would collapse to a NULL
@@ -571,8 +610,8 @@ class LakeTable:
             # group still returns a real row.
             seq_ord = F.coalesce(F.col("last_seq"), F.lit(-1).cast("long"))
             packed = F.max_by(F.struct(*payload), seq_ord).alias("_win")
-            mdf = mdf.groupBy(*keys).agg(packed).select(
-                *keys, *[F.col(f"_win.{c}").alias(c) for c in payload]
+            mdf = mdf.groupBy(*KEYS).agg(packed).select(
+                *KEYS, *[F.col(f"_win.{c}").alias(c) for c in payload]
             )
             df = mdf.unionByName(raw(clean).select(*mdf.columns)) if clean else mdf
         else:
@@ -592,6 +631,124 @@ class LakeTable:
         clean = [e for e in entries if e["bucket"] not in delta_buckets]
         return touched, clean
 
+    def _plan(
+        self,
+        meta: dict[str, Any],
+        snap: dict[str, Any] | None,
+        bounds: dict[str, tuple[Any, Any]] | None = None,
+        tokens: dict[str, list[str]] | None = None,
+        buckets: set[int] | None = None,
+        include_tombstones: bool = False,
+    ) -> tuple[DataFrame, int, int]:
+        """Plan a read of ``snap`` (resolved by ``_snapshot`` from the
+        caller's ``meta``: file list, bucket space, schema and bloom
+        registry all come from that one metadata load) and return
+        ``(df, files_pruned, files_total)``. Every table read goes
+        through here.
+
+        ``bounds`` is {col: (lo, hi)}, either side None for open;
+        ``tokens`` is {col: [identifier, ...]}, every token required at
+        bloom.TOKEN_SEP boundaries. Manifest entries prune in three tiers:
+
+        1. **Bucket.** When the bounds pin both key columns to one string
+           value, only ``bucket_of(key, n)`` can hold the key, with ``n``
+           the snapshot's own ``n_buckets`` stamp — a point read at a
+           pre-rebucket snapshot hashes into that snapshot's bucket space.
+           ``buckets`` passes a bucket set directly (lookup_join).
+        2. **Key columns** (repo, path). Manifest min/max stats prune in
+           EVERY bucket, delta buckets included. That is safe because
+           every image of a key — base row, newer delta row, tombstone —
+           carries the same key columns: a file whose key bounds exclude
+           the predicate holds no image of any matching key, so dropping
+           it cannot change which image wins a matching key's LWW.
+        3. **Non-key columns, value blooms and token blooms** prune only
+           in buckets with no delta file, where a file's rows are final.
+           In a delta bucket a dropped file could hold the newer image of
+           a key whose older image passes the filter and would resurface
+           (a ``last_seq`` upper bound dropping the delta, say). Blooms
+           are loaded only when a sidecar is registered and a point
+           (lo == hi, probe type matching the column) or token probe
+           exists; bloom rows are keyed by immutable file paths, so a
+           historical snapshot's files answer with the bits built for them.
+
+        Files lacking stats or bloom rows are kept. The bounds re-apply
+        as one row filter after the merge — ``==`` on both key columns
+        for a full-key point, ``>=``/``<=`` otherwise, and
+        ``array_contains(split(col))`` per token — so the result equals
+        read() + filter. Key-column predicates reference only the LWW
+        aggregate's grouping keys, so Spark pushes them below it into the
+        parquet scan."""
+        bounds, tokens = bounds or {}, tokens or {}
+        entries = snap["manifest"] if snap else []
+        key = [bounds.get(k, (None, None)) for k in KEYS]
+        key_point = all(isinstance(lo, str) and lo == hi for lo, hi in key)
+        if key_point and buckets is None and snap:
+            n = snap.get("n_buckets") or meta["n_buckets"]
+            buckets = {bucket_of(tuple(lo for lo, _ in key), n)}
+
+        probes: list[tuple[str, list[Any]]] = [(f"{c}#tokens", ts) for c, ts in tokens.items()]
+        if bounds and meta.get("bloom_sidecars"):
+            # a value probe is only sound when the Python value's rendering
+            # provably equals Spark's string cast of the column for every
+            # row the bloom hashed: str probes on string columns, int
+            # probes on integral columns. Anything else (int-vs-string
+            # "042" vs "42", float "1.0" vs "1") could prune a file that
+            # CONTAINS the match, so mismatched pairs skip the bloom.
+            probe_ok = {
+                f.name: (str if isinstance(f.dataType, T.StringType) else int)
+                for f in schema_evo.registry_to_schema(meta["schema"]).fields
+                if isinstance(
+                    f.dataType,
+                    (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType),
+                )
+            }
+            probes += [
+                (c, [lo])
+                for c, (lo, hi) in bounds.items()
+                if lo is not None
+                and lo == hi
+                and c in probe_ok
+                and isinstance(lo, probe_ok[c])
+                and not isinstance(lo, bool)
+            ]
+        blooms = self._load_blooms(meta) if probes and meta.get("bloom_sidecars") else {}
+        delta_buckets = {e["bucket"] for e in entries if e.get("kind") == "delta"}
+
+        def keep(e: dict[str, Any]) -> bool:
+            if buckets is not None and e["bucket"] not in buckets:
+                return False
+            final = e["bucket"] not in delta_buckets
+            for c, (lo, hi) in bounds.items():
+                if (final or c in KEYS) and not _stats_overlap(e, c, lo, hi):
+                    return False
+            if not final:
+                return True
+            for bloom_key, values in probes:
+                rec = blooms.get((e["path"], bloom_key))
+                if rec is not None and not all(
+                    _bloom_probe(rec[0], v, rec[1], rec[2]) for v in values
+                ):
+                    return False
+            return True
+
+        preds = []
+        for c, (lo, hi) in bounds.items():
+            if key_point and c in KEYS:
+                preds.append(F.col(c) == F.lit(lo))
+                continue
+            if lo is not None:
+                preds.append(F.col(c) >= F.lit(lo))
+            if hi is not None:
+                preds.append(F.col(c) <= F.lit(hi))
+        for c, ts in tokens.items():
+            split = F.split(F.col(c).cast("string"), TOKEN_SEP)
+            preds += [F.array_contains(split, t) for t in ts]
+        kept = [e for e in entries if keep(e)]
+        df = self._read_entries(meta, kept, include_tombstones)
+        if preds:
+            df = df.filter(reduce(operator.and_, preds))
+        return df, len(entries) - len(kept), len(entries)
+
     def read(
         self,
         snapshot_id: int | None = None,
@@ -606,100 +763,77 @@ class LakeTable:
         FOR TIMESTAMP AS OF). Tombstones are hidden unless asked for; MOR
         delta files are LWW-merged transparently."""
         meta = self._load_metadata()
-        snap = self._resolve_snapshot(meta, snapshot_id, ref, as_of_ms)
-        if snap is None:
-            return self._read_entries([], include_tombstones)
-        return self._read_entries(snap["manifest"], include_tombstones)
+        snap = self._snapshot(meta, snapshot_id, ref, as_of_ms)
+        return self._plan(meta, snap, include_tombstones=include_tombstones)[0]
 
-    def _resolve_snapshot(
+    def scan_where(
         self,
-        meta: dict[str, Any],
+        bounds: dict[str, tuple[Any, Any]],
+        include_tombstones: bool = False,
+        with_stats: bool = False,
         snapshot_id: int | None = None,
         ref: str = "main",
         as_of_ms: int | None = None,
-    ) -> dict[str, Any] | None:
-        """Resolve a snapshot by explicit id, ref head, or FOR TIMESTAMP
-        AS OF — the shared time-travel rule of read(), scan_where, and
-        scan_contains. None = empty table (no snapshot on the ref)."""
-        if snapshot_id is not None:
-            sid = snapshot_id
-        elif as_of_ms is not None:
-            chain = [
-                s
-                for s in self._ancestry(meta, self._head(meta, ref))
-                if s["timestamp_ms"] <= as_of_ms
-            ]
-            if not chain:
-                raise ValueError(
-                    f"no snapshot on {ref!r} at or before {as_of_ms} "
-                    "(before table history, or expired)"
-                )
-            sid = chain[-1]["snapshot_id"]
-        else:
-            sid = self._head(meta, ref)
-        if sid is None:
-            return None
-        snap = next((s for s in meta["snapshots"] if s["snapshot_id"] == sid), None)
-        if snap is None:
-            raise ValueError(
-                f"snapshot {sid} not found (expired by expire_snapshots, or never existed)"
-            )
-        return snap
+    ):
+        """Rows whose columns fall in ``bounds`` ({col: (lo, hi)}, either
+        side None for open) at the snapshot read() would resolve, with the
+        manifest pruned by ``_plan``'s three tiers; the result equals
+        read() + filter. A point lookup at any snapshot is this with both
+        key columns pinned. ``with_stats=True`` returns
+        ``(df, files_pruned, files_total)``."""
+        meta = self._load_metadata()
+        snap = self._snapshot(meta, snapshot_id, ref, as_of_ms)
+        out = self._plan(meta, snap, bounds=bounds, include_tombstones=include_tombstones)
+        return out if with_stats else out[0]
 
-    def read_buckets(
+    def scan_contains(
         self,
-        buckets: set[int],
-        snapshot: dict[str, Any] | None = None,
+        col: str,
+        token: str | list[str],
         include_tombstones: bool = False,
-    ) -> DataFrame:
-        """Manifest-level partition pruning: only files in the given buckets."""
-        snap = snapshot or self.current_snapshot()
-        entries = [e for e in (snap["manifest"] if snap else []) if e["bucket"] in buckets]
-        return self._read_entries(entries, include_tombstones)
+        with_stats: bool = False,
+        snapshot_id: int | None = None,
+        ref: str = "main",
+        as_of_ms: int | None = None,
+    ):
+        """Distributed grep: rows whose ``col`` text contains the
+        identifier ``token`` — or ALL of a list of tokens (the multi-term
+        AND grep) — at bloom.TOKEN_SEP boundaries. Files whose token bloom
+        (``build_blooms(..., mode="tokens")``) proves any term absent are
+        skipped (``_plan``'s tier 3), so selectivity compounds; the row
+        filter re-applies the same tokenization, so a bloom false positive
+        just contributes zero rows. FPR is the build's m_bits sizing
+        choice vs the file's distinct-token count."""
+        tokens = [token] if isinstance(token, str) else list(token)
+        if not tokens or any(not t or re.search(TOKEN_SEP, t) for t in tokens):
+            raise ValueError(
+                f"tokens must be non-empty single identifiers (no "
+                f"{TOKEN_SEP} chars): {tokens!r}"
+            )
+        meta = self._load_metadata()
+        snap = self._snapshot(meta, snapshot_id, ref, as_of_ms)
+        out = self._plan(meta, snap, tokens={col: tokens}, include_tombstones=include_tombstones)
+        return out if with_stats else out[0]
 
     def lookup(self, repo: str, path: str) -> DataFrame:
-        """Point lookup by full merge key — the CDC state-store read path.
+        """Point lookup by full merge key on the current main head — the
+        CDC state-store read path: one bucket's files, pruned by their key
+        bounds (``_plan``). Time travel: ``scan_where`` on both keys."""
+        return self.scan_where({"repo": (repo, repo), "path": (path, path)})
 
-        Hashes (repo, path) to its bucket on the driver with the writer's
-        own rule (``bucket_of``, the twin of bucket_expr; no Spark job),
-        then scans only that bucket's files:
-        O(1/n_buckets) of the table regardless of total size, so a point
-        read against 10^10 rows touches one bucket's parquet (further
-        pruned by parquet row-group stats under the exact filter pushed
-        below). Within the bucket, files whose manifest ``repo`` bounds
-        exclude the key are skipped without opening them (Iceberg-style
-        file-level stats pruning) — under the sorted-merge strategy files
-        are key-sorted, so a lookup typically opens one file per snapshot
-        generation, not the whole bucket. The scan is the only Spark work a
-        lookup does.
-
-        Snapshot isolation: ONE metadata load supplies both the snapshot
-        and the bucket count, and the count comes from the snapshot's own
-        ``n_buckets`` stamp — a rebucket committing concurrently can't
-        make the hash land in a different bucket space than the manifest
-        being filtered."""
-        meta = self._load_metadata()
-        sid = self._head(meta, "main")
-        snap = (
-            next((s for s in meta["snapshots"] if s["snapshot_id"] == sid), None)
-            if sid is not None
-            else None
-        )
-        n_buckets = (snap or {}).get("n_buckets") or meta["n_buckets"]
-        b = bucket_of((repo, path), n_buckets)
-        entries = [
-            e
-            for e in (snap["manifest"] if snap else [])
-            if e["bucket"] == b and _stats_may_contain(e, "repo", repo)
-        ]
-        return self._read_entries(entries).filter(
-            (F.col("repo") == repo) & (F.col("path") == path)
-        )
+    def scan_repos(self, lo: str, hi: str | None = None) -> DataFrame:
+        """Repo(-range) scan ``[lo, hi]`` (``hi`` defaults to ``lo``) on the
+        current main head; pruning as in ``_plan``. Bucketing hashes the
+        full key, so a repo spans every bucket and, with files covering
+        most of the repo range, the manifest bounds seldom prune: what
+        prunes is the row filter pushed below the LWW aggregate (and, at
+        scale, parquet row-group stats of the key-sorted files)."""
+        return self.scan_where({"repo": (lo, lo if hi is None else hi)})
 
     def lookup_join(
         self,
         events: DataFrame,
-        keys: tuple[str, str] = ("repo", "path"),
+        keys: tuple[str, str] = KEYS,
         how: str = "left",
         state_prefix: str = "state_",
     ) -> DataFrame:
@@ -710,24 +844,17 @@ class LakeTable:
         Scale shape: the probe side (a micro-batch) is small, the table
         side is the 10^10-row corpus — so never scan the corpus. The
         events' keys are hashed with the writer's own ``bucket_expr``;
-        only the touched buckets' files are read (O(batch-buckets /
-        n_buckets) of the table), each further pruned by per-file ``repo``
-        manifest bounds against the batch's repo range. The driver-side
-        collects are bounded: distinct bucket ids (≤ n_buckets) and a
-        2-value repo min/max. The final equi-join's small side is the
-        batch, which AQE broadcasts; snapshot isolation comes from reading
-        ONE snapshot's manifest for both pruning steps."""
+        the touched bucket set and the batch's repo range go to ``_plan``
+        (tiers 1 and 2), so only O(batch-buckets / n_buckets) of the table
+        is read. The driver-side collects are bounded: distinct bucket
+        ids (≤ n_buckets) and a 2-value repo min/max. The final equi-join's
+        small side is the batch, which AQE broadcasts; snapshot isolation
+        comes from ONE metadata load supplying snapshot, bucket count and
+        manifest (a rebucket committing concurrently cannot split the hash
+        space from the manifest being pruned)."""
         kr, kp = keys
-        # ONE metadata load supplies snapshot, manifest, and bucket count —
-        # same discipline as lookup(): a rebucket committing concurrently
-        # must not split the hash space from the manifest being pruned
         meta = self._load_metadata()
-        sid = self._head(meta, "main")
-        snap = (
-            next((s for s in meta["snapshots"] if s["snapshot_id"] == sid), None)
-            if sid is not None
-            else None
-        )
+        snap = self._snapshot(meta)
         if snap is None:
             raise ValueError("lookup_join against an empty table (no snapshot)")
         n_buckets = snap.get("n_buckets") or meta["n_buckets"]
@@ -772,12 +899,7 @@ class LakeTable:
                 )
             )
         )
-        entries = [
-            e
-            for e in snap["manifest"]
-            if e["bucket"] in touched and _stats_overlap(e, "repo", lo, hi)
-        ]
-        state = self._read_entries(entries)
+        state = self._plan(meta, snap, bounds={kr: (lo, hi)}, buckets=touched)[0]
         # change events legitimately carry the same payload column names as
         # the state (commit/lang/content); prefix the state side so the
         # enriched row holds both unambiguously
@@ -785,32 +907,6 @@ class LakeTable:
             kr, kp, *[F.col(c).alias(f"{state_prefix}{c}") for c in state.columns if c not in (kr, kp)]
         )
         return events.join(state, on=[kr, kp], how=how)
-
-    def scan_repos(self, lo: str, hi: str | None = None) -> DataFrame:
-        """Repo(-range) scan with manifest file pruning — the analytics
-        read path for "give me repo X" / "repos [lo, hi]" queries.
-
-        Bucketing hashes the FULL (repo, path) key (skew-free merges; see
-        bucket_expr), so a repo's rows span every bucket and bucket pruning
-        can't help here. File pruning by the manifest's per-file repo
-        bounds only helps when files cover narrow repo ranges: a bucket's
-        file holds keys of every repo the batch touched, so in practice
-        (e.g. 1000 repos over 16 buckets) every file spans nearly the whole
-        repo range and is opened. What prunes is the row filter: it
-        references only the LWW aggregate's grouping keys, so it is pushed
-        below the aggregate into the parquet scan — only matching rows are
-        shuffled — and at scale the files' key-sorted row groups let
-        parquet min/max stats skip most of each file. ``hi`` defaults to
-        ``lo`` (single-repo scan). Conservative: files without stats are
-        always read."""
-        hi = lo if hi is None else hi
-        snap = self.current_snapshot()
-        entries = [
-            e
-            for e in (snap["manifest"] if snap else [])
-            if _stats_overlap(e, "repo", lo, hi)
-        ]
-        return self._read_entries(entries).filter(F.col("repo").between(lo, hi))
 
     # -------------------------------------------------------------- write
     def _write_data_files(
@@ -996,12 +1092,8 @@ class LakeTable:
             "_bucket", bucket_expr(meta["n_buckets"])
         )
         entries = self._write_data_files(dfb, epoch_id)
-        sid = self._head(meta, branch)
-        kept = (
-            next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)["manifest"]
-            if sid is not None
-            else []
-        )
+        snap = self._snapshot(meta, ref=branch)
+        kept = snap["manifest"] if snap else []
         if new_schema != meta["schema"]:
             meta["schema"] = new_schema
             self._write_metadata(meta, version=base_v + 1)
@@ -1267,12 +1359,7 @@ class LakeTable:
             F.col(seq_col).cast("long").alias(seq_col),
             F.col(op_col).alias(op_col),
         )
-        sid = self._head(meta, branch)
-        snap = (
-            next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
-            if sid is not None
-            else None
-        )
+        snap = self._snapshot(meta, ref=branch)
         # Layout guard: bucket ids are only meaningful within one
         # n_buckets space. A branch staged before a rebucket would
         # otherwise mix old-space kept entries with new-space deltas in
@@ -1315,7 +1402,7 @@ class LakeTable:
             for e in snap["manifest"]:
                 (base_files if e["bucket"] in touched else kept).append(e)
         if base_files:
-            base = self._read_entries(base_files, include_tombstones=True, merged=False)
+            base = self._read_entries(meta, base_files, include_tombstones=True, merged=False)
             base_ev = self._as_events(base, payload_cols, seq_col, op_col)
             all_ev = base_ev.unionByName(delta_ev)
         else:
@@ -1583,8 +1670,9 @@ class LakeTable:
         carries the whole bucket, so unchanged keys of touched buckets
         re-appear — inherent to copy-on-write without row-level diff
         tracking; consumers LWW on (key, last_seq) as usual."""
-        new_entries = self._changes_entries(from_snapshot_id, to_snapshot_id)
-        df = self._read_entries(new_entries, include_tombstones=True, merged=False)
+        meta = self._load_metadata()
+        new_entries = self._changes_entries(from_snapshot_id, to_snapshot_id, meta=meta)
+        df = self._read_entries(meta, new_entries, include_tombstones=True, merged=False)
         return df.withColumn(
             "_op",
             F.when(F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)), F.lit("delete")).otherwise(
@@ -1665,10 +1753,9 @@ class LakeTable:
         watermark, tombstones are retained indefinitely."""
         t0 = time.time()
         meta, base_v = self._load_versioned()
-        sid = meta["current_snapshot_id"]
-        if sid is None:
+        snap = self._snapshot(meta)
+        if snap is None:
             return None
-        snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
         delta_entries = [e for e in snap["manifest"] if e.get("kind") == "delta"]
         if not delta_entries:
             return None
@@ -1678,7 +1765,7 @@ class LakeTable:
         touched = {e["bucket"] for e in delta_entries}
         consumed = [e for e in snap["manifest"] if e["bucket"] in touched]
         kept = [e for e in snap["manifest"] if e["bucket"] not in touched]
-        phys = self._read_entries(consumed, include_tombstones=True, merged=False)
+        phys = self._read_entries(meta, consumed, include_tombstones=True, merged=False)
         ev = self._as_events(phys, payload_cols, seq_col="seq", op_col="op")
         final = self._sorted_lww(ev, ("repo", "path"), "seq", "op", payload_cols, n_buckets)
         if expire_tombstones_below is not None:
@@ -1734,16 +1821,15 @@ class LakeTable:
         meta["partition_spec"] = [
             {"source": ["repo", "path"], "transform": f"bucket[{n_buckets}]"}
         ]
-        sid = meta["current_snapshot_id"]
-        if sid is None:
+        snap = self._snapshot(meta)
+        if snap is None:
             self._write_metadata(meta, version=base_v + 1)
             return None
-        snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
         state_schema = schema_evo.registry_to_schema(meta["schema"])
         payload_cols = [
             f.name for f in state_schema.fields if f.name not in ("content_sha256", "last_seq")
         ]
-        phys = self._read_entries(snap["manifest"], include_tombstones=True, merged=False)
+        phys = self._read_entries(meta, snap["manifest"], include_tombstones=True, merged=False)
         ev = self._as_events(phys, payload_cols, seq_col="seq", op_col="op")
         final = self._sorted_lww(ev, ("repo", "path"), "seq", "op", payload_cols, n_buckets)
         new_entries = self._write_data_files(final, None, kind="base")
@@ -1798,16 +1884,15 @@ class LakeTable:
             raise ValueError(f"strategy must be zorder|linear, got {strategy!r}")
         t0 = time.time()
         meta, base_v = self._load_versioned()
-        sid = meta["current_snapshot_id"]
-        if sid is None:
+        snap = self._snapshot(meta)
+        if snap is None:
             return None
-        snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
         base_entries = [e for e in snap["manifest"] if e.get("kind") != "delta"]
         delta_entries = [e for e in snap["manifest"] if e.get("kind") == "delta"]
         if not base_entries:
             return None
         n_buckets = meta["n_buckets"]
-        phys = self._read_entries(base_entries, include_tombstones=True, merged=False)
+        phys = self._read_entries(meta, base_entries, include_tombstones=True, merged=False)
         missing = [c for c in cols if c not in phys.columns]
         if missing:
             raise ValueError(f"clustering columns not in table schema: {missing}")
@@ -1892,10 +1977,9 @@ class LakeTable:
         m_bits = m_bits or _bl.DEFAULT_M_BITS
         k = k or _bl.DEFAULT_K
         meta = self._load_metadata()
-        sid = meta["current_snapshot_id"]
-        if sid is None:
+        snap = self._snapshot(meta)
+        if snap is None:
             return 0
-        snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
         have = {} if force else self._load_blooms(meta)
         keys = [c if mode == "value" else f"{c}#tokens" for c in cols]
         todo = [
@@ -1906,7 +1990,7 @@ class LakeTable:
         ]
         if not todo:
             return 0
-        phys = self._physical_schema(self.schema())
+        phys = self._physical_schema(schema_evo.registry_to_schema(meta["schema"]))
         rows = _bl.build_file_blooms(
             self.spark, todo, cols, phys, m_bits, k, mode=mode
         )
@@ -2003,180 +2087,6 @@ class LakeTable:
         )
         self._bloom_cache = (sidecars, loaded)
         return loaded
-
-    def _pruned_read(self, entries, keep, include_tombstones, with_stats,
-                     row_filter):
-        """Shared frame of the pruned-scan surfaces (scan_where /
-        scan_contains): manifest entries → keep()-filter (caller encodes
-        stats/bloom logic; delta-bucket exemption is the caller's duty) →
-        merged read → row filter; ``with_stats`` returns
-        (df, files_pruned, files_total). ``entries`` comes from the
-        CALLER's metadata read — the keep closure and the file list must
-        describe the same snapshot, or a commit landing between two loads
-        could evaluate a stale delta-bucket exemption against fresh
-        files."""
-        kept = [e for e in entries if keep(e)]
-        df = row_filter(self._read_entries(kept, include_tombstones))
-        if with_stats:
-            return df, len(entries) - len(kept), len(entries)
-        return df
-
-    def scan_where(
-        self,
-        bounds: dict[str, tuple[Any, Any]],
-        include_tombstones: bool = False,
-        with_stats: bool = False,
-        snapshot_id: int | None = None,
-        ref: str = "main",
-        as_of_ms: int | None = None,
-    ):
-        """Read the current snapshot with manifest-stats FILE pruning on
-        ``bounds`` ({col: (lo, hi)}, either side None for open), then the
-        same bounds re-applied as row filters (pushed to the parquet scan).
-
-        Pruning is exact under MOR: buckets that carry ANY delta file are
-        exempt from file pruning (their base+delta rows must all reach the
-        read-time LWW — dropping a file could resurrect a stale or deleted
-        row whose newer image lives in the pruned file), and the row
-        filter runs AFTER the merge. Buckets with no deltas prune freely:
-        there a file's rows are final, so bounds-disjoint files cannot
-        contribute. Files lacking stats for a bounded column are kept.
-
-        ``with_stats=True`` returns ``(df, files_pruned, files_total)`` —
-        the measure tests/test_zorder.py uses for the layout A/B.
-
-        Time travel (``snapshot_id`` / ``ref`` / ``as_of_ms``, read()'s
-        rule) composes with every pruning tier: min/max stats live in the
-        historical manifest itself, and bloom sidecar rows are keyed by
-        immutable COW file paths, so a historical file that still exists
-        answers probes with the exact bits built for it — "what did this
-        key look like at snapshot N" costs the same few files as today's
-        lookup."""
-        meta = self._load_metadata()
-        snap = self._resolve_snapshot(meta, snapshot_id, ref, as_of_ms)
-        entries = snap["manifest"] if snap else []
-        delta_buckets = {e["bucket"] for e in entries if e.get("kind") == "delta"}
-        # POINT predicates (lo == hi, non-null) additionally consult the
-        # per-file Bloom sidecars when built (build_blooms): min/max keeps
-        # any file whose range straddles the key — under hash-bucketed
-        # layouts that is most of the bucket — while the bloom proves
-        # absence exactly (no false negatives). Files without a bloom row
-        # and non-(str|int) values fall back to "maybe" (never prune
-        # blind), delta buckets stay exempt like all file pruning here.
-        # a probe is only sound when the Python value's rendering provably
-        # equals Spark's string cast of the column for every row the bloom
-        # hashed: str probes on string columns, int probes on integral
-        # columns. Anything else (int-vs-string "042" vs "42", float
-        # "1.0" vs "1") could prune a file that CONTAINS the match —
-        # mismatched pairs simply skip the bloom (min/max + row filter
-        # still apply). build_file_blooms rejects non-string/integral
-        # columns at build time; this guards the probe side.
-        probe_ok = {
-            f.name: (str if isinstance(f.dataType, T.StringType) else int)
-            for f in self.schema().fields
-            if isinstance(
-                f.dataType,
-                (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-            )
-        }
-        points = {
-            c: lo
-            for c, (lo, hi) in bounds.items()
-            if lo is not None
-            and lo == hi
-            and c in probe_ok
-            and isinstance(lo, probe_ok[c])
-            and not isinstance(lo, bool)
-        }
-        blooms = (
-            self._load_blooms(meta)
-            if points and meta.get("bloom_sidecars")
-            else {}
-        )
-
-        def keep(e: dict[str, Any]) -> bool:
-            if e["bucket"] in delta_buckets:
-                return True
-            if not all(
-                _stats_overlap(e, c, lo, hi) for c, (lo, hi) in bounds.items()
-            ):
-                return False
-            for c, v in points.items():
-                rec = blooms.get((e["path"], c))
-                if rec is not None and not _bloom_probe(rec[0], v, rec[1], rec[2]):
-                    return False
-            return True
-
-        def row_filter(df):
-            for c, (lo, hi) in bounds.items():
-                if lo is not None:
-                    df = df.filter(F.col(c) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(c) <= F.lit(hi))
-            return df
-
-        return self._pruned_read(
-            entries, keep, include_tombstones, with_stats, row_filter
-        )
-
-    def scan_contains(
-        self,
-        col: str,
-        token: str | list[str],
-        include_tombstones: bool = False,
-        with_stats: bool = False,
-        snapshot_id: int | None = None,
-        ref: str = "main",
-        as_of_ms: int | None = None,
-    ):
-        """Distributed grep: rows whose ``col`` text contains the
-        identifier ``token`` — or ALL of a list of tokens (the
-        multi-term AND grep) — at bloom.TOKEN_SEP boundaries, reading
-        only files whose token bloom (``build_blooms(..., mode="tokens")``)
-        may contain every probed token: conjunction prunes a file as soon
-        as ANY term's bloom proves absence, so selectivity compounds.
-        The row filter re-applies the SAME tokenization
-        (``array_contains(split(col), t)`` per token), so results are
-        file-layout- and pruning-independent — a file kept by a bloom
-        false positive just contributes zero rows. Same exactness rules
-        as scan_where: delta buckets exempt, bloomless files kept.
-
-        The 100 TB shape: a grep over a petabyte corpus touches the few
-        files per bucket that actually contain the identifier — the
-        full-scan regex alternative reads everything. FPR is the build's
-        m_bits sizing choice vs the file's distinct-token count."""
-        from .bloom import TOKEN_SEP
-
-        tokens = [token] if isinstance(token, str) else list(token)
-        if not tokens or any(not t or re.search(TOKEN_SEP, t) for t in tokens):
-            raise ValueError(
-                f"tokens must be non-empty single identifiers (no "
-                f"{TOKEN_SEP} chars): {tokens!r}"
-            )
-        meta = self._load_metadata()
-        snap = self._resolve_snapshot(meta, snapshot_id, ref, as_of_ms)
-        entries = snap["manifest"] if snap else []
-        delta_buckets = {e["bucket"] for e in entries if e.get("kind") == "delta"}
-        blooms = self._load_blooms(meta) if meta.get("bloom_sidecars") else {}
-        key = f"{col}#tokens"
-
-        def keep(e: dict[str, Any]) -> bool:
-            if e["bucket"] in delta_buckets:
-                return True
-            rec = blooms.get((e["path"], key))
-            if rec is None:
-                return True
-            return all(_bloom_probe(rec[0], t, rec[1], rec[2]) for t in tokens)
-
-        def row_filter(df):
-            toks = F.split(F.col(col).cast("string"), TOKEN_SEP)
-            for t in tokens:
-                df = df.filter(F.array_contains(toks, t))
-            return df
-
-        return self._pruned_read(
-            entries, keep, include_tombstones, with_stats, row_filter
-        )
 
 
 def _state_schema_for(payload_schema: T.StructType, seq_col: str) -> T.StructType:

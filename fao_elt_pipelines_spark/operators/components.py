@@ -157,19 +157,21 @@ def connected_components_star(
     raises rather than returning split clusters, like the min-label
     form. Lineage is cut per round (localCheckpoint) for the same
     exponential-plan reason."""
-    prev = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+    ab = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # node set is fixed up front, from the pairs BEFORE self-pairs are
+    # dropped: a node seen only in an (a, a) pair is its own component
+    # (connected_components labels it too), and contraction may drop a
+    # node from the EDGE list once it is folded into its star center —
+    # either way it still owes a label row at the end
+    nodes = (
+        ab.select(F.col("a").alias("node"))
+        .union(ab.select(F.col("b").alias("node")))
         .distinct()
         .localCheckpoint()
     )
-    # node set is fixed up front: contraction may drop a node from the
-    # EDGE list once it is folded into its star center, but it still owes
-    # a label row at the end
-    nodes = (
-        prev.select(F.col("a").alias("node"))
-        .union(prev.select(F.col("b").alias("node")))
+    prev = (
+        ab.filter(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
         .localCheckpoint()
     )

@@ -1059,7 +1059,10 @@ def semantic_dedup_oracle_sql(C) -> str:
 
 # assignment score is the unnormalized dot (argmax-equivalent to the
 # numpy path's normalized dot: positive per-row scale preserves order);
-# ties break to the lower cell id, matching np.argmax
+# ties break to the lower cell id, matching np.argmax. The equivalence
+# holds in exact arithmetic only: in floating point a vector nearly
+# equidistant from two centroids can be assigned a different cell by
+# DuckDB and by Spark (different summation order and rounding).
 SQL_SEMANTIC_DEDUP_TEMPLATE = f"""
 WITH RECURSIVE
 cents(cid, c) AS (VALUES
@@ -1630,7 +1633,10 @@ def _ann_kmeans_topk_sql_for(path: str) -> str:
     C = SIM.kmeans_centroids([r[0] for r in rows], k=16, iters=10)
     cent_values = centroid_values_sql(C)
     # assignment score: unnormalized dot — argmax-equivalent to the numpy
-    # path's normalized dot (positive per-row scale preserves order)
+    # path's normalized dot (positive per-row scale preserves order) in
+    # exact arithmetic only: in floating point a vector nearly equidistant
+    # from two centroids can be assigned a different cell by DuckDB and by
+    # Spark (different summation order and rounding)
     assign = f"""
   SELECT e.vec_id, e.embedding, cents.cid,
          {_DOT.format(a="e.embedding", b="cents.c")} AS s

@@ -130,19 +130,13 @@ def check_table(path: str) -> tuple[bool, str]:
 
     if not LakeTable.exists(path):
         return False, f"no lake table at {path}"
-    vp = os.path.join(path, "metadata", "VERSION")
-    v = open(vp).read().strip()
-    with open(os.path.join(path, "metadata", f"v{v}.metadata.json")) as f:
-        meta = json.load(f)
-    sid = meta["current_snapshot_id"]
-    if sid is None:
+    # metadata and manifest reads only: no path of current_snapshot() uses spark
+    table = LakeTable(None, path)
+    v = table._version()
+    snap = table.current_snapshot()
+    if snap is None:
         return True, f"v{v}, empty table"
-    snap = next(s for s in meta["snapshots"] if s["snapshot_id"] == sid)
-    if "manifest_file" in snap:  # manifest-file format: load the pointer
-        with open(os.path.join(path, "metadata", snap["manifest_file"])) as f:
-            manifest = json.load(f)
-    else:  # pre-split inline format
-        manifest = snap["manifest"]
+    sid, manifest = snap["snapshot_id"], snap["manifest"]
     gone = [e["path"] for e in manifest if not os.path.exists(e["path"])]
     if gone:
         return False, f"{len(gone)} manifest files missing, e.g. {gone[0]}"

@@ -20,7 +20,10 @@ snapshot metadata.
     python scripts/table_tool.py --table /path read [--ref NAME] [--as-of-ms TS]
 
 Each subcommand prints one JSON document (``read`` prints one JSON line
-per row) so output is scriptable.
+per row) so output is scriptable. The metadata-only subcommands
+(``METADATA_CMDS``: describe, history, check, expire, refs, orphans) start
+no Spark session, so they return in about a second instead of paying a
+JVM start.
 """
 
 from __future__ import annotations
@@ -34,6 +37,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fao_elt_pipelines_spark.lake.table import LakeTable  # noqa: E402
 from fao_elt_pipelines_spark.session import get_spark  # noqa: E402
+
+
+#: Subcommands served from the metadata log and file stats alone.
+METADATA_CMDS = frozenset(
+    {"describe", "history", "check", "expire", "branch", "tag", "publish",
+     "drop-ref", "orphans"}
+)
 
 
 def cmd_describe(table: LakeTable) -> dict:
@@ -244,7 +254,9 @@ def main() -> None:
                       "this are kept (in-flight writers)")
     args = ap.parse_args()
 
-    spark = get_spark("table_tool", cores=args.cores)
+    # metadata-only subcommands read and CAS the table's JSON metadata and
+    # stat files; they never build a DataFrame, so they start no JVM
+    spark = None if args.cmd in METADATA_CMDS else get_spark("table_tool", cores=args.cores)
     table = LakeTable(spark, args.table)
     if args.cmd == "describe":
         print(json.dumps(cmd_describe(table)))
@@ -386,7 +398,8 @@ def main() -> None:
     elif args.cmd == "orphans":
         out = table.remove_orphan_files(older_than_ms=int(args.older_than_hours * 3600 * 1000))
         print(json.dumps(out))
-    spark.stop()
+    if spark is not None:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from fao_elt_pipelines_spark import binlog
 from fao_elt_pipelines_spark.lake import bloom as BL
-from fao_elt_pipelines_spark.lake.table import LakeTable
+from fao_elt_pipelines_spark.lake.table import LakeTable, bucket_of
 from scripts.replay_job import STATE_SCHEMA
 
 N_EVENTS = 6_000
@@ -112,8 +112,9 @@ def test_absent_key_prunes_everything(table):
 
 
 def test_point_scan_exact_with_mor_delta(spark, table, events):
-    """A MOR delta exempts its bucket from ALL pruning (bloom included):
-    the point read stays exactly read()+filter."""
+    """A MOR delta exempts its bucket from non-key-column and bloom
+    pruning (key-column bounds still prune there, see LakeTable._plan):
+    the point read on ``path`` stays exactly read()+filter."""
     late = events.filter(F.col("seq") % 97 == 0).withColumn(
         "seq", F.col("seq") + 1_000_000
     )
@@ -463,3 +464,13 @@ def test_time_travel_point_scan(spark, tmp_path, events):
     )
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, expect.collect()))
     assert df.count() == 1 and pruned > 0
+    # a time-travel point lookup is scan_where on both keys: the bucket
+    # tier opens only files of the victim key's bucket at sid_old
+    key = {"repo": (victim["repo"],) * 2, "path": (victim["path"],) * 2}
+    pt = t.scan_where(key, snapshot_id=sid_old)
+    assert [r["commit"] for r in pt.collect()] == [victim["commit"]]
+    b = bucket_of((victim["repo"], victim["path"]), 4)
+    old_files = {e["path"] for s in t.snapshots() if s["snapshot_id"] == sid_old
+                 for e in s["manifest"] if e["bucket"] == b}
+    opened = {f.removeprefix("file://") for f in pt.inputFiles()}
+    assert opened and opened <= old_files

@@ -121,8 +121,29 @@ def test_lookup_runs_no_job_beyond_its_scan(spark, many_file_table):
         for e in table.current_snapshot()["manifest"]
         if e["bucket"] == b and _stats_may_contain(e, "repo", repo)
     ]
-    scan = table._read_entries(entries).filter((F.col("repo") == repo) & (F.col("path") == path))
+    scan = table._read_entries(table._load_metadata(), entries).filter((F.col("repo") == repo) & (F.col("path") == path))
     want, scan_jobs = _jobs(spark, "scan", scan.collect)
     got, lookup_jobs = _jobs(spark, "lookup", lambda: table.lookup(repo, path).collect())
     assert got == want and len(got) == 1
     assert lookup_jobs == scan_jobs
+
+
+def test_each_read_loads_metadata_once(spark, many_file_table, monkeypatch):
+    """A read resolves its snapshot, schema and file list from ONE
+    metadata load."""
+    table, _, (repo, path) = many_file_table
+    loads = []
+    real = LakeTable._load_metadata
+    monkeypatch.setattr(LakeTable, "_load_metadata", lambda self: loads.append(1) or real(self))
+    n_loads = {}
+    for name, build in [
+        ("read", table.read),
+        ("lookup", lambda: table.lookup(repo, path)),
+        ("scan_repos", lambda: table.scan_repos(repo)),
+        ("scan_where", lambda: table.scan_where({"path": (path, path)})),
+        ("scan_contains", lambda: table.scan_contains("content", "x")),
+    ]:
+        loads.clear()
+        build()
+        n_loads[name] = len(loads)
+    assert n_loads == dict.fromkeys(n_loads, 1)

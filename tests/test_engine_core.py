@@ -17,7 +17,7 @@ from fao_elt_pipelines_spark.lake.lineage import lineage_df
 from fao_elt_pipelines_spark.lake.metrics import metrics_df
 from fao_elt_pipelines_spark.lake.replay import replay
 from fao_elt_pipelines_spark.lake.schema_evo import IncompatibleSchemaChange
-from fao_elt_pipelines_spark.lake.table import LakeTable, _state_schema_for
+from fao_elt_pipelines_spark.lake.table import LakeTable, _state_schema_for, bucket_of
 from fao_elt_pipelines_spark.operators.dedup import lww_dedup
 from pyspark.sql import types as T
 
@@ -1000,6 +1000,17 @@ def test_rebucket_online_layout_evolution(spark, events, events_parquet, tmp_pat
         for r in old.collect()
     }
     assert got_old == want
+
+    # a point scan at the pre-rebucket snapshot hashes into THAT
+    # snapshot's 8-bucket space, not the table's current 48
+    pt = table.scan_where({"repo": (repo, repo), "path": (path, path)}, snapshot_id=pre_sid)
+    got = [(r["commit"], r["lang"], r["content_sha256"], r["last_seq"]) for r in pt.collect()]
+    assert got == [(commit, lang, sha, last_seq)]
+    old_b = bucket_of((repo, path), 8)
+    old_files = {e["path"] for s in table.snapshots() if s["snapshot_id"] == pre_sid
+                 for e in s["manifest"] if e["bucket"] == old_b}
+    opened = {f.removeprefix("file://") for f in pt.inputFiles()}
+    assert opened and opened <= old_files
 
     # a subsequent merge lands in the new layout and stays consistent
     extra = binlog.change_events(

@@ -607,6 +607,20 @@ def test_star_contraction_matches_min_label(spark):
     assert b[4] == 1 and b[27] == 20 and b[32] == 30
 
 
+def test_star_contraction_labels_self_pair_nodes(spark):
+    """A node seen only in a self-pair is its own component: the star
+    form emits its label row, like the min-label form."""
+    from fao_elt_pipelines_spark.operators.components import (
+        connected_components,
+        connected_components_star,
+    )
+
+    pairs = spark.createDataFrame([(5, 5), (1, 2)], "doc_a long, doc_b long")
+    a = sorted(map(tuple, connected_components(pairs).collect()))
+    b = sorted(map(tuple, connected_components_star(pairs).collect()))
+    assert a == b == [(1, 1), (2, 1), (5, 5)]
+
+
 def test_star_contraction_path_graph_log_rounds(spark):
     """The O(log n) property on the adversarial shape min-propagation
     can't handle: a 256-node path has diameter 255 (min-label needs ~255

@@ -4,6 +4,7 @@ no Python in hot paths)."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from fao_elt_pipelines_spark.plans.queries import q_gold_region_rollup
@@ -11,6 +12,15 @@ from fao_elt_pipelines_spark.plans.queries import q_gold_region_rollup
 
 from tests.plan_utils import n_nodes as _n_nodes
 from tests.plan_utils import plan_of as _plan
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Every registry entry's physical plan, built once for the module's
+    whole-registry audits (building some entries runs Spark jobs)."""
+    from fao_elt_pipelines_spark.plans.registry import REGISTRY
+
+    return {name: _plan(fn(spark, sf_dir)) for name, (fn, _) in REGISTRY.items()}
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -97,16 +107,14 @@ def test_lww_maxby_has_partial_aggregate(spark):
     assert _n_nodes(plan, "Exchange") == 1
 
 
-def test_no_python_udf_in_relational_queries(spark, sf_dir):
+def test_no_python_udf_in_relational_queries(registry_plans):
     """Every oracle-checked relational query stays JVM-side (no
     BatchEvalPython / ArrowEvalPython nodes) — UDFs are reserved for the
     explicitly-Python surfaces (simhash's unpackbits reduction, the
     kmeans-IVF trained-quantizer assignment/probe einsums — which since
     round 5 also cell the semantic_dedup sweep via semantic_cells —
     multimodal decode), all Arrow-batched numpy, never row-at-a-time."""
-    from fao_elt_pipelines_spark.plans.registry import REGISTRY
-
-    for name, (fn, sql) in REGISTRY.items():
+    for name, plan in registry_plans.items():
         if name in (
             "simhash_signatures",
             "simhash_neardup",
@@ -114,7 +122,6 @@ def test_no_python_udf_in_relational_queries(spark, sf_dir):
             "semantic_dedup",  # trained-cell assignment (kmeans_assign)
         ):
             continue
-        plan = _plan(fn(spark, sf_dir))
         assert "EvalPython" not in plan, f"{name} plan contains Python eval"
 
 
@@ -263,18 +270,15 @@ def test_cube_single_shuffle_expand(spark, sf_dir):
 _BRUTE_BASELINES = {"ann_cosine_topk", "embedding_neardup", "dedup_ngram_jaccard"}
 
 
-def test_global_plan_hygiene_all_entries(spark, sf_dir):
+def test_global_plan_hygiene_all_entries(registry_plans):
     """Every registry entry's physical plan, audited at once: no
     row-at-a-time Python (BatchEvalPython — Arrow-batched pandas UDFs are
     fine), no single-partition exchange (the scale killer), and no
     nested-loop/cartesian outside the labeled brute baselines. This is the
     regression net for every future entry, not just the ones with a
     dedicated plan test."""
-    from fao_elt_pipelines_spark.plans.registry import REGISTRY
-
     violations = {}
-    for name, (fn, _) in REGISTRY.items():
-        plan = _plan(fn(spark, sf_dir))
+    for name, plan in registry_plans.items():
         flags = []
         if "BatchEvalPython" in plan:
             flags.append("row-at-a-time Python UDF")

@@ -4,7 +4,7 @@ LakeTable.cluster / scan_where).
 The claim under test is twofold: (1) CORRECTNESS — clustering rewrites
 the exact same physical rows (any strategy, tombstones included) and
 scan_where returns exactly read()+filter under every layout, including
-with MOR deltas present (delta buckets exempt from pruning); (2) the
+with MOR deltas present (delta buckets exempt from non-key pruning); (2) the
 LAYOUT EFFECT — under linear (repo, path) order a path-range predicate
 prunes ~nothing, under z-order it prunes files on BOTH dimensions.
 """
@@ -97,10 +97,12 @@ def test_scan_where_repo_still_prunes_after_zorder(spark, tmp_path, events):
     assert pruned > 0, (pruned, total)
 
 
-def test_scan_where_mor_delta_buckets_exempt(spark, tmp_path, events):
-    """With MOR deltas present, delta-carrying buckets must NOT be file-
-    pruned (a pruned base file could resurrect a stale row through the
-    read-time LWW) — and the result still equals read()+filter."""
+def test_scan_where_prune_tiers_under_mor_deltas(spark, tmp_path, events):
+    """With MOR deltas present, key-column bounds still prune files in
+    delta-carrying buckets (every image of a key shares its key columns),
+    while a non-key bound prunes nothing there: a ``last_seq`` upper bound
+    would drop the newer delta image and resurface the older base image.
+    Both scans equal read()+filter."""
     t = _mk_table(spark, tmp_path, events, "t_mor")
     t.cluster(["repo", "path"], bins=64, max_records_per_file=500)
     # second epoch lands as MOR deltas over a subset of keys
@@ -109,12 +111,22 @@ def test_scan_where_mor_delta_buckets_exempt(spark, tmp_path, events):
         events_per_epoch=2_000, num_partitions=4,
     ).withColumn("seq", F.col("seq") + N_EVENTS)
     t.merge_changes(upd, epoch_id=1, mode="mor")
+    manifest = t.current_snapshot()["manifest"]
+    delta_buckets = {e["bucket"] for e in manifest if e["kind"] == "delta"}
+    outside = sum(e["bucket"] not in delta_buckets for e in manifest)
+
     bounds = {"path": ("src/dir_3/", "src/dir_5/")}
     df, pruned, total = t.scan_where(bounds, with_stats=True)
     expected = t.read().filter(
         F.col("path").between("src/dir_3/", "src/dir_5/")
     )
     assert _state(df) == _state(expected)
+    assert pruned > outside, (pruned, total, outside)  # some in delta buckets
+
+    df, pruned, total = t.scan_where({"last_seq": (None, N_EVENTS - 1)}, with_stats=True)
+    expected = t.read().filter(F.col("last_seq") <= N_EVENTS - 1)
+    assert _state(df) == _state(expected)
+    assert pruned <= outside, (pruned, total, outside)
 
 
 def test_interleave_msb_aligned_variable_width():
