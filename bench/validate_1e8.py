@@ -388,6 +388,7 @@ def main() -> None:
 
     # ---- engine state → per-repo aggregates + sample hash (Spark read:
     # the only reader that understands MOR deltas/tombstones)
+    from fao_elt_pipelines_spark.lake.mv import IncrementalGoldView
     from fao_elt_pipelines_spark.lake.table import LakeTable
     from fao_elt_pipelines_spark.session import get_spark
 
@@ -490,20 +491,9 @@ def main() -> None:
 
     # ---- MV check: the gold view replay_job maintained must match the
     # oracle's per-repo (live paths, byte totals) exactly
-    # Seed the marker walk from the cursor hint, mirroring mv.cursor():
-    # GC keeps only the last KEEP_VERSIONS markers, so after 2+ refreshes
-    # (the mirror arm's sliced replay) v0 no longer exists and a walk
-    # from -1 would find nothing.
-    mv_cur, v = None, -1
+    # cursor() reads only the state dir's markers: no Spark, no table
     mv_dir = os.path.join(args.workdir, "mv")
-    hint = os.path.join(mv_dir, "cursor.json")
-    if os.path.exists(hint):
-        with open(hint) as f:
-            v = json.load(f)["version"]
-    while os.path.exists(os.path.join(mv_dir, f"v{v + 1}.commit.json")):
-        v += 1
-    with open(os.path.join(mv_dir, f"v{v}.commit.json")) as f:
-        mv_cur = json.load(f)
+    mv_cur = IncrementalGoldView(None, None, mv_dir).cursor()
     mv_match = bool(
         con.execute(
             f"""

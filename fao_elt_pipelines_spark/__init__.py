@@ -10,14 +10,14 @@ pandas UDFs only where built-ins can't express the semantics) and adds the
 CDC machinery the north rule mandates: binlog tail → last-write-wins dedup →
 key-partitioned MERGE upsert into an Iceberg-semantics lake table, additive
 schema evolution, exactly-once epoch-checkpointed sink, per-partition
-lineage + metrics, skew salting, resumable replay.
+lineage + metrics, resumable replay.
 
 Layout
 ------
 - ``session``     — tuned SparkSession builders (local[N] for tests/bench)
 - ``binlog``      — deterministic distributed synthetic change-stream generator
 - ``operators/``  — dedup (LWW, exact, MinHash-LSH, SimHash, n-gram Jaccard,
-                    embedding near-dup), merge, skew salting, top-k
+                    embedding near-dup), merge, top-k
 - ``lake/``       — Iceberg-semantics table format (snapshots, manifests,
                     atomic commit, time travel), schema evolution,
                     checkpoints, replay driver, lineage, metrics

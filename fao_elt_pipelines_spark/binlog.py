@@ -18,7 +18,7 @@ Design for scale
 - Zipf-ish hot-repo skew: ``repo_rank = floor((n_repos+1)^u) - 1`` with
   u~U[0,1) makes repo ranks log-uniform, so repo_00000 alone gets
   ``log(2)/log(n_repos+1)`` of all traffic (~10% at 1000 repos) — this is
-  the skew the salting path (operators.skew) must absorb.
+  the skew full-key bucketing must absorb.
 - ``content`` is derived from ``(repo, path, seq)`` alone, so any oracle can
   recompute the expected sha256 without materializing the stream.
 - ``ingest_ts`` has bounded jitter vs seq (late-data realism); correctness

@@ -3,8 +3,12 @@
 The reference tracks progress only in memory (``pages_fetched`` /
 LIMIT-OFFSET cursor, ``/root/reference/ingestion/api_client.py:191``,
 ``pg_client.py:212-241``) and is lost on crash. The engine's checkpoint is a
-tiny JSON document written atomically after each table commit, recording the
-last applied ``(epoch, seq_hi)`` per source.
+tiny JSON document replaced atomically and durably (``durable.replace_json``:
+fsync, rename, fsync the directory) after each table commit, recording the
+last applied ``(epoch, seq_hi)`` per source. A torn checkpoint (published
+without its data blocks) raises ``durable.TornFileError`` naming the file;
+deleting it is safe for exactly-once (below) but drops the persisted expiry
+and bootstrap watermarks.
 
 Exactly-once does NOT depend on this file: the table snapshot itself records
 the epoch id, and replay skips epochs in ``LakeTable.committed_epochs()``.
@@ -16,9 +20,10 @@ checkpoint heals — no duplicate or lost applies.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any
+
+from . import durable
 
 
 class CheckpointStore:
@@ -27,10 +32,10 @@ class CheckpointStore:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def load(self) -> dict[str, Any]:
-        if not os.path.exists(self.path):
+        try:
+            return durable.load_json(self.path)
+        except FileNotFoundError:
             return {"sources": {}}
-        with open(self.path) as f:
-            return json.load(f)
 
     def last_epoch(self, source: str = "binlog") -> int | None:
         e = self.load()["sources"].get(source)
@@ -69,14 +74,4 @@ class CheckpointStore:
         self._write(doc)
 
     def _write(self, doc: dict[str, Any]) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f, indent=1)
-            # fsync BEFORE the rename: without it a power loss can persist
-            # the rename while the data blocks never hit disk, leaving a
-            # truncated checkpoint that wedges every resume (and deleting
-            # it would also discard the expiry watermark that prevents
-            # tombstone resurrection)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.path)
+        durable.replace_json(self.path, doc)

@@ -38,11 +38,13 @@ Consistency & crash safety mirror the table's commit protocol:
   the pinned head snapshot, so a concurrent commit can never make the
   committed cursor lag the aggregated state;
 - state commits are CAS: parquet lands in a fresh uuid directory, then
-  the version's commit marker is exclusive-created (``open(..., "x")``)
-  — a concurrent refresh loses the create and raises
+  the version's commit marker is published fail-if-exists
+  (``durable.create_json``: fsynced, then linked, so a marker is visible
+  only when complete) — a concurrent refresh loses the create and raises
   :class:`MVCommitConflict` instead of tearing the winner's state;
-  ``cursor.json`` is only a roll-forward hint (recovered from markers
-  after a crash between marker create and hint swap);
+  ``cursor.json`` is only a roll-forward hint (``durable.replace_json``;
+  recovered from markers after a crash between marker create and hint
+  swap);
 - a crash mid-refresh leaves the old cursor pointing at the old state
   and at worst an unreferenced data directory (harmless orphan; never
   deleted by GC, which removes only directories that dropped markers
@@ -56,7 +58,6 @@ keep at least the refresh cadence's worth of snapshots.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -65,6 +66,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import durable
 from .changelog import INCREMENTAL_SAFE_OPS, _interval_ops, interval_image
 from .table import LakeTable
 
@@ -114,16 +116,14 @@ class IncrementalGoldView:
         rolled forward past any crash between marker create and hint
         swap."""
         try:
-            with open(os.path.join(self.state_dir, "cursor.json")) as f:
-                v = json.load(f)["version"]
+            v = durable.load_json(os.path.join(self.state_dir, "cursor.json"))["version"]
         except FileNotFoundError:
             v = -1
         while os.path.exists(self._marker_path(v + 1)):
             v += 1
         if v < 0:
             return None
-        with open(self._marker_path(v)) as f:
-            return json.load(f)
+        return durable.load_json(self._marker_path(v))
 
     def read(self) -> DataFrame:
         """Current view contents: (repo, n_paths, total_bytes)."""
@@ -141,17 +141,13 @@ class IncrementalGoldView:
         """CAS half of the commit: exclusive-create the version marker,
         then swap the hint and GC superseded versions."""
         try:
-            with open(self._marker_path(version), "x") as f:
-                json.dump(payload, f)
+            durable.create_json(self._marker_path(version), payload)
         except FileExistsError:
             raise MVCommitConflict(
                 f"state version {version} was committed concurrently; "
                 f"re-read the cursor and retry the refresh"
             ) from None
-        tmp = os.path.join(self.state_dir, "cursor.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(tmp, os.path.join(self.state_dir, "cursor.json"))
+        durable.replace_json(os.path.join(self.state_dir, "cursor.json"), {"version": version})
         # GC: drop markers older than the keep window, and data dirs that
         # only those dropped markers referenced (cursor-only advances
         # share a dir across versions). Unreferenced uuid dirs from
@@ -172,8 +168,7 @@ class IncrementalGoldView:
                     if misses_below_window > 8:
                         break
                 continue
-            with open(p) as f:
-                d = json.load(f)["dir"]
+            d = durable.load_json(p)["dir"]
             if version - v < self.KEEP_VERSIONS:
                 keep.add(d)
             else:

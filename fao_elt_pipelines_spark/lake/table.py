@@ -12,8 +12,10 @@ small interface so a real catalog's ``MERGE INTO`` can be swapped in:
   once at commit and loaded lazily on access — so per-commit metadata cost
   is O(current files), never O(snapshots × files), and expire_snapshots
   prunes manifests and old metadata versions alongside data files
-- atomic commit via write-temp-then-``os.replace`` of a VERSION pointer —
-  the local-FS stand-in for a catalog's compare-and-swap
+- atomic commit: each metadata version is published fail-if-exists
+  (``durable.create_json``, the local-FS stand-in for a catalog's
+  compare-and-swap), then a VERSION pointer is advanced
+  (``durable.replace_json``); both fsync file and directory
 - refs: named branches and tags over the snapshot log (Iceberg's refs
   model) — write-audit-publish staging (lake.wap), tags that pin
   snapshots across expiry, publish = fast-forward pointer CAS; epoch
@@ -48,7 +50,6 @@ the table and rewriting a few percent of it.
 from __future__ import annotations
 
 import fcntl
-import json
 import operator
 import os
 import re
@@ -62,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import schema_evo
+from . import durable, schema_evo
 from .bloom import TOKEN_SEP
 from .bloom import probe as _bloom_probe
 
@@ -201,8 +202,7 @@ class _LazySnapshot(dict):
 
     def __missing__(self, key: str) -> Any:
         if key == "manifest" and "manifest_file" in self:
-            with open(os.path.join(self._meta_dir, self["manifest_file"])) as f:
-                manifest = json.load(f)
+            manifest = durable.load_json(os.path.join(self._meta_dir, self["manifest_file"]))
             self["manifest"] = manifest  # cache; stripped again on serialize
             return manifest
         raise KeyError(key)
@@ -254,8 +254,7 @@ class LakeTable:
 
     # ----------------------------------------------------------- metadata
     def _version(self) -> int:
-        with open(os.path.join(self.meta_dir, "VERSION")) as f:
-            return int(f.read().strip())
+        return int(durable.load_json(os.path.join(self.meta_dir, "VERSION")))
 
     def _load_versioned(self) -> tuple[dict[str, Any], int]:
         """Metadata plus the version it was read AT — the version a
@@ -265,13 +264,11 @@ class LakeTable:
         manifest wins, their files dropped): the read version must pin
         the commit target."""
         v = self._version()
-        with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as f:
-            return self._wrap_snapshots(json.load(f)), v
+        meta = durable.load_json(os.path.join(self.meta_dir, f"v{v}.metadata.json"))
+        return self._wrap_snapshots(meta), v
 
     def _load_metadata(self) -> dict[str, Any]:
-        v = self._version()
-        with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as f:
-            return self._wrap_snapshots(json.load(f))
+        return self._load_versioned()[0]
 
     def _wrap_snapshots(self, meta: dict[str, Any]) -> dict[str, Any]:
         """Wrap snapshot entries so ``s["manifest"]`` lazily loads the
@@ -286,8 +283,9 @@ class LakeTable:
     def _write_metadata(self, meta: dict[str, Any], version: int) -> None:
         """Atomic compare-and-swap commit.
 
-        The versioned metadata file is created with link(2) semantics —
-        atomic fail-if-exists — so of two writers that both read version
+        The versioned metadata file is published by
+        ``durable.create_json`` — link(2), atomic fail-if-exists, after the
+        content is fsynced — so of two writers that both read version
         N and try to commit N+1, exactly ONE wins; the loser gets
         CommitConflictError and must re-read and retry (the engine's
         epoch retry is idempotent, so replay-level recovery is simply
@@ -299,12 +297,11 @@ class LakeTable:
         A crash between the link and the pointer advance leaves
         v{version} durable but VERSION stale; the next writer's
         FileExistsError handler repairs the pointer forward (the linked
-        file is fully written before the link, so advancing is always
-        safe) — without the repair, every retry would re-read the stale
-        version, re-target version, and conflict forever (livelock).
+        file is fully written and fsynced before the link, so advancing is
+        always safe) — without the repair, every retry would re-read the
+        stale version, re-target version, and conflict forever (livelock).
         """
         mp = os.path.join(self.meta_dir, f"v{version}.metadata.json")
-        tmp = mp + f".tmp.{uuid.uuid4().hex[:8]}"
         # Never serialize a lazily-cached manifest back inline: the
         # manifest file is the single immutable source of truth, and
         # inlining it would resurrect the O(snapshots × files) growth.
@@ -313,12 +310,9 @@ class LakeTable:
             {k: v for k, v in s.items() if not (k == "manifest" and "manifest_file" in s)}
             for s in meta["snapshots"]
         ]
-        with open(tmp, "w") as f:
-            json.dump(out, f, indent=1)
         try:
-            os.link(tmp, mp)  # atomic fail-if-exists: the CAS
+            durable.create_json(mp, out)  # atomic fail-if-exists: the CAS
         except FileExistsError:
-            os.remove(tmp)
             # Crash-repair: v{version} exists but VERSION may still point
             # below it (a writer died between link and pointer advance).
             # Advance the pointer so the conflicting retry's re-read sees
@@ -329,7 +323,6 @@ class LakeTable:
                 f"metadata version {version} was committed by a concurrent "
                 f"writer; re-read the table and retry the operation"
             ) from None
-        os.remove(tmp)
         self._advance_version_pointer(version)
 
     def _advance_version_pointer(self, version: int) -> None:
@@ -340,9 +333,7 @@ class LakeTable:
         without it, two concurrent committers can interleave so the older
         version lands LAST, regressing the pointer and hiding the newer
         (already CAS-committed) snapshot from readers until a future
-        commit's repair; a shared tmp name additionally let one writer's
-        ``os.replace`` consume the other's file (FileNotFoundError after a
-        successful commit). The v{N} metadata files themselves remain the
+        commit's repair. The v{N} metadata files themselves remain the
         CAS-protected source of truth — this lock covers only the pointer
         swap (on an object store the pointer is the catalog's swap
         primitive instead)."""
@@ -352,10 +343,7 @@ class LakeTable:
             try:
                 if os.path.exists(vp) and self._version() >= version:
                     return  # a newer commit already advanced the pointer
-                tmp = f"{vp}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
-                with open(tmp, "w") as f:
-                    f.write(str(version))
-                os.replace(tmp, vp)
+                durable.replace_json(vp, version)
             finally:
                 fcntl.flock(lf, fcntl.LOCK_UN)
 
@@ -1034,14 +1022,13 @@ class LakeTable:
         )
         meta["last_snapshot_id"] = sid
         manifest = kept_entries + new_entries
-        # The manifest file is written ONCE, immutably, before the metadata
-        # CAS (uuid-suffixed so racing writers targeting the same sid never
-        # collide). If the CAS loses, the file is a harmless unreferenced
-        # orphan — same contract as the loser's data files.
+        # The manifest file is written ONCE, immutably and durably, before
+        # the metadata CAS (uuid-suffixed so racing writers targeting the
+        # same sid never collide). If the CAS loses, the file is a harmless
+        # unreferenced orphan — same contract as the loser's data files.
         os.makedirs(self.manifest_dir, exist_ok=True)
         mf_rel = os.path.join("manifests", f"snap-{sid}-{uuid.uuid4().hex[:8]}.json")
-        with open(os.path.join(self.meta_dir, mf_rel), "w") as f:
-            json.dump(manifest, f)
+        durable.create_json(os.path.join(self.meta_dir, mf_rel), manifest)
         snap = _LazySnapshot(
             {
                 "snapshot_id": sid,

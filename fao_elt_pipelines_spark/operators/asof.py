@@ -32,7 +32,7 @@ full event+history timeline lands in one task — the correct layout while
 per-key cardinality is bounded (users, repos, devices). A pathological
 hot key is the same skew problem every keyed stateful op here has;
 pre-thin the right side (dedupe per (key, ts) — as q_asof_join_events
-does) and see operators/skew.py for the salting machinery. Determinism:
+does). Determinism:
 when several right rows share (key, ts), ``tiebreak`` names the column
 whose LARGEST value wins; without it a deterministic-but-arbitrary hash
 of the payload breaks the tie (never run-to-run flaky, but callers that

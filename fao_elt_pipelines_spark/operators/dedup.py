@@ -25,8 +25,8 @@ Two physical strategies for LWW, same semantics:
   versions); it sorts within partitions and shuffles every row.
 
 The key ``(repo, path)`` is fine-grained (paths spread hot repos), so even
-the window form rarely skews; repo-level skew is handled at MERGE/write time
-by operators.skew.
+the window form rarely skews; repo-level skew is spread at MERGE/write time
+by bucketing on the full key.
 """
 
 from __future__ import annotations

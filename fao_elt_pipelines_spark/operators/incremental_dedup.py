@@ -41,7 +41,6 @@ Scale design (what the index stores, and what it does NOT):
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 from dataclasses import dataclass
@@ -51,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import similarity as SIM
+from ..lake import durable
 
 ShinglesFor = Callable[[DataFrame], DataFrame]
 
@@ -166,9 +166,9 @@ class LshIndex:
     """Parquet-backed LSH index: survives process restarts; per batch it
     OVERWRITES three dirs (pairs/batch=<id>, sizes/batch=<id>,
     bands/batch=<id>) and then atomically swaps the commit manifest
-    (commits/MANIFEST.json, temp-write + rename — the lake's VERSION-
-    pointer pattern at miniature scale). Reads — both the candidate index
-    inside ingest and ``all_pairs`` — see MANIFESTED batches only, so
+    (commits/MANIFEST.json via ``lake.durable.replace_json`` — the lake's
+    VERSION-pointer write at miniature scale). Reads — both the candidate
+    index inside ingest and ``all_pairs`` — see MANIFESTED batches only, so
     every crash state is simply invisible: a rerun of an uncommitted
     batch recomputes against the same committed index and overwrites the
     partial dirs; a rerun of a committed batch short-circuits to its
@@ -210,12 +210,11 @@ class LshIndex:
 
     def _manifest(self) -> dict:
         try:
-            with open(self._manifest_path()) as fh:
-                m = json.load(fh)
-                # manifests written before the ingested-id list existed:
-                # everything committed had been ingested
-                m.setdefault("ingested", list(m.get("committed", [])))
-                return m
+            m = durable.load_json(self._manifest_path())
+            # manifests written before the ingested-id list existed:
+            # everything committed had been ingested
+            m.setdefault("ingested", list(m.get("committed", [])))
+            return m
         except FileNotFoundError:
             commits = self._dir("commits")
             if os.path.isdir(commits) and any(
@@ -237,12 +236,9 @@ class LshIndex:
 
     def _swap_manifest(self, committed: list[str], ingested: list[str]) -> None:
         os.makedirs(self._dir("commits"), exist_ok=True)
-        tmp = self._dir("commits", ".manifest.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"committed": committed, "ingested": ingested}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._manifest_path())
+        durable.replace_json(
+            self._manifest_path(), {"committed": committed, "ingested": ingested}
+        )
 
     def _mark_committed(self, batch_id: int | str) -> None:
         m = self._manifest()

@@ -17,10 +17,9 @@ so it never noticed; a 100 TB corpus would).
    partition's global row offset.
 
 Offsets are per-partition counts — at most ``num_partitions`` integers, so
-they are collected driver-side (the same by-construction-tiny pattern as
-operators.skew's hot-key scan) and baked back in as a literal pid→offset
-map: no single-partition Exchange anywhere in the physical plan, which
-tests/test_plans.py asserts.
+they are collected driver-side (tiny by construction) and baked back in
+as a literal pid→offset map: no single-partition Exchange anywhere in the
+physical plan, which tests/test_plans.py asserts.
 
 The range-partitioned input is persisted so the count pass and the rank
 pass observe the same sampled range boundaries (RangePartitioner samples;

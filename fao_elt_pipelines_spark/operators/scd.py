@@ -29,8 +29,7 @@ numbering) all share ``partitionBy(keys)``, so the physical plan carries a
 single Exchange and never a single-partition window
 (tests/test_scd.py::test_scd2_plan_single_exchange). Per-key timelines
 land in one task each — correct at 100 TB while per-key cardinality is
-bounded (the same layout contract as operators/asof.py; see
-operators/skew.py for the hot-key machinery if it ever isn't).
+bounded (the same layout contract as operators/asof.py).
 """
 
 from __future__ import annotations

@@ -4,9 +4,9 @@ Local mode is the sandbox stand-in for a real cluster: ``local[N]`` gives N
 executor threads in one JVM. All scale-relevant knobs are expressed so the
 same builder works unchanged on a 1000-executor cluster:
 
-- AQE on (runtime coalesce, skew-join splitting) — the engine additionally
-  salts known-hot keys itself (operators.skew) because AQE only fixes
-  sort-merge-join skew, not window/partitionBy skew.
+- AQE on (runtime coalesce, skew-join splitting). Hot repos need no
+  salting: every keyed shuffle and write partitions on the full
+  ``(repo, path)`` key, which spreads a hot repo's paths evenly.
 - shuffle partitions ∝ cores (not the 200 default) — at cluster scale this
   is set ∝ total executor cores by the submitter.
 - Arrow enabled — every Python-side stage is a vectorized pandas UDF.

@@ -10,10 +10,11 @@ the state-store shape (one current state, no time travel):
 - **Exactly-once across restarts**: every applied batch id is recorded in
   the version's commit file; a re-delivered batch (foreachBatch re-offer
   after crash, or a batch-driver retry) is detected and skipped. The
-  commit pointer advances by atomic ``os.replace`` AFTER the new state
-  version is fully written, so a crash at any point leaves either the old
-  committed state (batch re-applies cleanly) or the new one (batch
-  skips) — never a torn state.
+  commit pointer advances by an atomic, fsynced replace
+  (``lake.durable.replace_json``) AFTER the new state version is fully
+  written, so a crash at any point leaves either the old committed state
+  (batch re-applies cleanly) or the new one (batch skips) — never a torn
+  state.
 - **O(touched) maintenance, not O(state)**: state lives bucketed by the
   same full-key hash the lake uses (``bucket_expr`` — hot repos spread
   over all buckets). A batch folds map-side to per-key deltas, only the
@@ -33,7 +34,6 @@ Reads: ``mergeable()`` returns the raw monoid state (feed it to
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -42,6 +42,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..lake import durable
 from ..lake.table import bucket_expr
 from ..operators.partial_update import (
     RESET_OPS_DEFAULT,
@@ -117,10 +118,10 @@ class PartialStateStore:
         return os.path.join(self.path, "commit.json")
 
     def _load_commit(self) -> dict:
-        if not os.path.exists(self._commit_path()):
+        try:
+            return durable.load_json(self._commit_path())
+        except FileNotFoundError:
             return {"version": -1, "applied": []}
-        with open(self._commit_path()) as f:
-            return json.load(f)
 
     def version(self) -> int:
         return self._load_commit()["version"]
@@ -190,10 +191,7 @@ class PartialStateStore:
                 "applied": (commit["applied"] + [batch_id])[-APPLIED_WINDOW:],
                 "config": self._config(),
             }
-            ctmp = self._commit_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-            with open(ctmp, "w") as f:
-                json.dump(commit, f)
-            os.replace(ctmp, self._commit_path())
+            durable.replace_json(self._commit_path(), commit)
             return True
         if cur_v < 0:
             merged, touched = delta, None  # first batch: all buckets are new
@@ -242,10 +240,7 @@ class PartialStateStore:
             "applied": (commit["applied"] + [batch_id])[-APPLIED_WINDOW:],
             "config": self._config(),
         }
-        ctmp = self._commit_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(ctmp, "w") as f:
-            json.dump(commit, f)
-        os.replace(ctmp, self._commit_path())
+        durable.replace_json(self._commit_path(), commit)
         # prune old versions beyond the recovery window
         for name in os.listdir(self.path):
             if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= cur_v + 1 - KEEP_VERSIONS:

@@ -35,6 +35,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from fao_elt_pipelines_spark.lake.durable import TornFileError  # noqa: E402
 from fao_elt_pipelines_spark.lake.table import LakeTable  # noqa: E402
 from fao_elt_pipelines_spark.session import get_spark  # noqa: E402
 
@@ -71,11 +72,16 @@ def cmd_check(table: LakeTable) -> dict:
     parquet row counts match the manifest entries; bucket directory names
     must agree with the manifest's bucket ids; the snapshot DAG must be
     well-formed (unique ids, parents either retained or expired); every
-    ref must point at a retained snapshot. The cheap invariant sweep an
-    operator runs before trusting a table after an incident."""
+    ref must point at a retained snapshot; a torn (empty or undecodable)
+    VERSION, metadata or manifest file is reported as an issue. The cheap
+    invariant sweep an operator runs before trusting a table after an
+    incident."""
     import pyarrow.parquet as pq
 
-    meta = table._load_metadata()
+    try:
+        meta = table._load_metadata()
+    except TornFileError as e:
+        return {"ok": False, "snapshots": 0, "files_checked": 0, "issues": [str(e)]}
     issues: list[str] = []
     ids = [s["snapshot_id"] for s in meta["snapshots"]]
     if len(ids) != len(set(ids)):
@@ -90,7 +96,12 @@ def cmd_check(table: LakeTable) -> dict:
     checked_files = 0
     seen_paths: set[str] = set()
     for s in meta["snapshots"]:
-        for e in s["manifest"]:
+        try:
+            entries = s["manifest"]
+        except TornFileError as err:
+            issues.append(f"snapshot {s['snapshot_id']}: {err}")
+            continue
+        for e in entries:
             if e["path"] in seen_paths:
                 continue
             seen_paths.add(e["path"])

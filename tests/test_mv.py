@@ -258,6 +258,44 @@ def test_refresh_crash_leaves_old_state(spark, mv_events, tmp_path, monkeypatch)
     assert healed["version"] == nxt["version"] and healed["dir"] == cur["dir"]
 
 
+class _Kill(BaseException):
+    """Stands in for a kill: no ``except Exception`` can swallow it."""
+
+
+def test_interrupted_marker_write_keeps_previous_version(spark, mv_events, tmp_path, monkeypatch):
+    """A kill while the commit marker's content is being written must not
+    leave a visible marker. An exclusive-create-then-write marker leaves a
+    0-byte ``v{N}.commit.json`` there, and every later cursor() (so every
+    read and refresh) fails to decode it. The previous version must stay
+    current and a retried refresh must converge."""
+    import json as _json
+
+    table = LakeTable.create(spark, str(tmp_path / "t"), STATE_SCHEMA, n_buckets=8)
+    ck = CheckpointStore(str(tmp_path / "ckpt.json"))
+    view = IncrementalGoldView(spark, table, str(tmp_path / "mv"))
+    replay(spark, mv_events, table, ck, mode="mor", max_epochs=3)
+    view.refresh()
+    cursor_before = view.cursor()
+    replay(spark, mv_events, table, ck, mode="mor")
+
+    real_dump = _json.dump
+
+    def killed_mid_marker(obj, fp, *args, **kwargs):
+        if isinstance(obj, dict) and "dir" in obj:  # the marker payload
+            raise _Kill("killed while writing the commit marker")
+        return real_dump(obj, fp, *args, **kwargs)
+
+    monkeypatch.setattr(_json, "dump", killed_mid_marker)
+    with pytest.raises(_Kill):
+        view.refresh()
+    monkeypatch.undo()
+
+    assert view.cursor() == cursor_before
+    rep = view.refresh()
+    assert rep["mode"] == "incremental"
+    assert _rows(view.read()) == _rows(_contrib(table.read()))
+
+
 def test_refresh_rebucket_forces_recompute(spark, mv_events, tmp_path):
     """A rebucket inside the refresh interval remaps keys across buckets:
     pre-rebucket change entries carry OLD-layout bucket ids, so the
